@@ -327,8 +327,8 @@ class IncrementalCorpusCleaner:
                     ),
                 )
             )
-        # persisted: merge_apply consumes the event frame three times
-        # (affected-bucket aggregate, LWW resolve, lineage offsets); the
+        # persisted: merge_apply consumes the event frame twice (envelope
+        # aggregate with lineage offsets, LWW resolve); the
         # replay bench reads events from parquet where re-reads are cheap,
         # but here each pass would re-run the quality+join pipeline
         # (measured ~8 s of the ~14 s warm batch at sf1)

@@ -498,9 +498,10 @@ class EmbeddingIndex:
         Same only-new-rows / materialize-before-append contract as
         MinHashIndex. ``dim``: an EXACT upper bound on vector length known
         from the corpus schema — skips the per-batch signs-frame max-size
-        probe job (see ``_plane_signature``; positions ≥ dim would silently
-        drop from signatures, so only pass a hard schema contract). Default
-        keeps the safe probe."""
+        probe job (see ``_plane_signature``). A vector longer than ``dim``
+        fails the batch loudly instead of silently dropping positions ≥ dim
+        from its signature; the check rides the existing projection, so it
+        costs no job. Default keeps the safe probe."""
         from battetl_spark.analytics.similarity import (
             _bucket_frame,
             _exploded_bucket_rows,
@@ -509,10 +510,16 @@ class EmbeddingIndex:
         )
 
         index = self.table.scan()
+        vec = F.col(vec_col).cast("array<double>")
+        if dim is not None:
+            vec = F.when(
+                F.size(vec) > dim,
+                F.raise_error(F.lit(f"vector longer than the dim hint {dim}")),
+            ).otherwise(vec)
         new_v = _track(
             vectors.select(
                 F.col(id_col).cast("long").alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("__v"),
+                vec.alias("__v"),
             ).join(index.select("vec_id"), "vec_id", "left_anti")
         )
         sig = _plane_signature(

@@ -387,8 +387,13 @@ def _banded(
 ) -> DataFrame:
     """Explode signatures into (id, band, band-hash) rows — band hash =
     xxhash64 over rows_per_band consecutive minhashes; bands that don't fit
-    (num_hashes % rows_per_band) are dropped, so r need not divide K."""
+    (num_hashes % rows_per_band) are dropped, so r need not divide K; with
+    fewer hashes than rows_per_band no band fits and the frame is empty."""
     bands = num_hashes // rows_per_band
+    if bands == 0:
+        return sigs.select(
+            id_col, F.lit(0).alias("band"), F.lit(0).cast("long").alias("bh")
+        ).limit(0)
     entries = ", ".join(
         f"named_struct('band', {b}, 'bh', xxhash64("
         + ", ".join(
@@ -491,8 +496,12 @@ def _auto_rows_per_band(
     aggregate — 1 driver-synchronous job instead of 3 (count + two probes)
     on the escalation path, 1 instead of 2 on the common r=start path. The
     chosen r — smallest within budget, same fewer-than-2-bands stop — is
-    decision-identical to the sequential loop, so results are unchanged."""
+    decision-identical to the sequential loop, so results are unchanged.
+    With fewer hashes than ``start`` rows no band fits: ``start`` comes back
+    with the empty banded frame, unprobed."""
     r = start
+    if num_hashes // r == 0:
+        return r, _banded(sigs, id_col, num_hashes, r)
     while True:
         rs = [r]
         if num_hashes // (r + 1) >= 2:

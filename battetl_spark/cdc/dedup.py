@@ -5,28 +5,16 @@ Reference semantics being reproduced (SURVEY.md §2.3):
 - newest-load-wins overwrite of overlaps  — Loader.py:236-332 (U2)
 Here both collapse to: keep the max-lsn event per (conv_id, turn_idx).
 
-Three interchangeable strategies, equivalence-tested:
-
-- ``agg`` (default): ``groupBy(key).agg(max_by(struct(*), lsn))``. Hash
-  aggregation with **map-side partial combine** — each task reduces its own
-  slice of a hot key before the shuffle, so a conversation receiving most
-  updates costs one partial row per task, not one shuffled row per event.
-  This is the Spark-native answer to key skew for dedup.
-- ``salted``: explicit two-phase reduce per the north-star requirement —
-  phase 1 groups by (key, salt = hash(lsn) % S) and picks a per-salt winner,
-  phase 2 re-merges the ≤S candidates per key. Structurally bounds reducer
-  fan-in even when partial aggregation is disabled or the payload is too wide
-  to combine map-side.
-- ``window``: ``row_number() over (partition by key order by lsn desc) = 1``
-  — the textbook formulation; requires a full sort per key, kept as the
-  readability/equivalence oracle.
-
-All are pure Catalyst plans (no Python in the hot path).
+``groupBy(key).agg(max_by(struct(*), lsn))`` is a hash aggregation with
+**map-side partial combine** — each task reduces its own slice of a hot key
+before the shuffle, so a conversation receiving most updates costs one
+partial row per task, not one shuffled row per event. A pure Catalyst plan
+(no Python in the hot path).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from battetl_spark.schemas import KEY_COLS
@@ -36,8 +24,6 @@ def lww_winners(
     events: DataFrame,
     key_cols: list[str] | None = None,
     order_col: str = "lsn",
-    strategy: str = "agg",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """Reduce a change-event batch to one winner per key (max order_col).
 
@@ -45,32 +31,7 @@ def lww_winners(
     """
     key_cols = key_cols or KEY_COLS
     payload = [c for c in events.columns if c not in key_cols]
-
-    if strategy == "window":
-        w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-        return (
-            events.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
-    def pick(df: DataFrame, group_cols: list[str]) -> DataFrame:
-        return df.groupBy(*group_cols).agg(
-            F.max_by(F.struct(*payload), F.col(order_col)).alias("__w")
-        )
-
-    if strategy == "agg":
-        won = pick(events, key_cols)
-        return won.select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload])
-
-    if strategy == "salted":
-        salted = events.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets))
-        )
-        phase1 = pick(salted, key_cols + ["__salt"]).select(
-            *key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload]
-        )
-        won = pick(phase1, key_cols)
-        return won.select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload])
-
-    raise ValueError(f"unknown dedup strategy: {strategy!r}")
+    won = events.groupBy(*key_cols).agg(
+        F.max_by(F.struct(*payload), F.col(order_col)).alias("__w")
+    )
+    return won.select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload])

@@ -41,37 +41,37 @@ event count, not the batch.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from battetl_spark.cdc.merge import (
+    CHANGE_COL,
+    ENVELOPE_COLS,
     MergeResult,
-    _affected_buckets,
-    _partition_offsets,
+    _apply_fenced,
 )
-from battetl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr, utc_now_iso
+from battetl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
 
 VALID_FROM = "valid_from_lsn"
 VALID_TO = "valid_to_lsn"
 OP_COL = "op"
 _META = (OP_COL, VALID_FROM, VALID_TO)
-_ENVELOPE = ("lsn", "op", "source_partition")
+_META_FIELDS = [
+    T.StructField(OP_COL, T.StringType(), False),
+    T.StructField(VALID_FROM, T.LongType(), False),
+    T.StructField(VALID_TO, T.LongType(), True),
+]
 
 
 def _incoming_history_schema(events: DataFrame) -> T.StructType:
     """History-table schema implied by an event batch: payload columns +
     the versioning meta (mirrors merge's _incoming_table_schema, so the
     same add/widen gate applies to the history sink)."""
-    fields = [f for f in events.schema.fields if f.name not in _ENVELOPE]
-    return T.StructType(
-        fields
-        + [
-            T.StructField(OP_COL, T.StringType(), False),
-            T.StructField(VALID_FROM, T.LongType(), False),
-            T.StructField(VALID_TO, T.LongType(), True),
-        ]
-    )
+    fields = [f for f in events.schema.fields if f.name not in ENVELOPE_COLS]
+    return T.StructType(fields + _META_FIELDS)
 
 
 def history_rows(
@@ -137,14 +137,7 @@ class HistoryTable:
         num_buckets: int = 16,
     ) -> "HistoryTable":
         fields = [f for f in payload_schema.fields if f.name not in _META]
-        schema = T.StructType(
-            fields
-            + [
-                T.StructField(OP_COL, T.StringType(), False),
-                T.StructField(VALID_FROM, T.LongType(), False),
-                T.StructField(VALID_TO, T.LongType(), True),
-            ]
-        )
+        schema = T.StructType(fields + _META_FIELDS)
         table = LakeTable.create(
             spark,
             path,
@@ -187,45 +180,30 @@ class HistoryTable:
         tie — replay is a byte-level no-op), and the affected keys' interval
         chains are re-derived, so late events splice instead of dropping.
         Same fence map as ``merge_apply``: a replayed ``epoch_id`` is a
-        whole-batch no-op, crash-after-commit included.
+        whole-batch no-op, crash-after-commit included. Lineage counts each
+        new version as inserted (or deleted, for a 'd' frame); duplicates of
+        existing versions count nowhere and rows_updated stays 0.
         """
-        from battetl_spark.lake.table import CommitConflict
+        return _apply_fenced(
+            self.table,
+            events,
+            epoch_id,
+            _incoming_history_schema(events),
+            partial(self._resolve, events),
+            collect_lineage=collect_lineage,
+            target_partitions=target_partitions,
+            conflict_retries=conflict_retries,
+        )
 
-        last: CommitConflict | None = None
-        for attempt in range(conflict_retries + 1):
-            try:
-                return self._apply_once(
-                    events, epoch_id, collect_lineage, target_partitions,
-                    rebases=attempt,
-                )
-            except CommitConflict as e:
-                last = e  # rebase: re-derive everything from a fresh snapshot
-        raise last
-
-    def _apply_once(
-        self,
-        events: DataFrame,
-        epoch_id: int | None,
-        collect_lineage: bool,
-        target_partitions: int | None,
-        rebases: int = 0,
-    ) -> MergeResult:
-        table = self.table
-        if epoch_id is not None and table.has_fence(epoch_id):
-            return MergeResult(applied=False)
-        # schema-evolution gate (adds / safe widenings; incompatible batches
-        # raise cleanly with nothing committed — same contract as merge)
-        schema = table.evolve_schema(_incoming_history_schema(events))
-        snap = table.snapshot()
+    def _resolve(
+        self, events: DataFrame, schema: T.StructType, snap: dict, buckets: list[int]
+    ) -> DataFrame:
+        """Existing versions of the touched buckets ∪ the batch → re-chained
+        intervals, each row tagged inserted/deleted if the batch added it."""
         key_cols = snap["key_cols"]
         schema_by_name = {f.name: f for f in schema.fields}
         payload_cols = [f.name for f in schema.fields if f.name not in _META]
         bucket = bucket_expr(snap["bucket_key"], snap["num_buckets"])
-
-        slim = events.select(bucket.alias(BUCKET_COL), "lsn")
-        buckets, batch_max_lsn = _affected_buckets(slim)
-        if not buckets:
-            return MergeResult(applied=False)
 
         def image(df: DataFrame, src: int) -> DataFrame:
             return df.select(
@@ -243,7 +221,7 @@ class HistoryTable:
                 else F.lit(None).cast("int").alias("source_partition"),
             ).withColumn(BUCKET_COL, bucket)
 
-        existing = image(table.scan(buckets, snap), src=0)
+        existing = image(self.table.scan(buckets, snap), src=0)
         incoming = image(events.withColumnRenamed("lsn", VALID_FROM), src=1)
         combined = existing.unionByName(incoming)
 
@@ -268,76 +246,13 @@ class HistoryTable:
                 ),
             )
         )
-        if collect_lineage:
-            out = out.persist()
-
-        lineage_rows: list[dict] = []
-        ins = dele = 0
-        try:
-            if collect_lineage:
-                offsets = _partition_offsets(events)
-                new = {
-                    (r["source_partition"], r[OP_COL] == "d"): r["n"]
-                    for r in out.filter(F.col("__src") == 1)
-                    .groupBy("source_partition", OP_COL)
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-                now = utc_now_iso()
-                for sp, off in sorted(
-                    offsets.items(), key=lambda kv: (kv[0] is None, kv[0])
-                ):
-                    n_del = sum(
-                        v for (p, is_d), v in new.items() if p == sp and is_d
-                    )
-                    n_ins = sum(
-                        v for (p, is_d), v in new.items() if p == sp and not is_d
-                    )
-                    lineage_rows.append(
-                        {
-                            "epoch_id": -1 if epoch_id is None else int(epoch_id),
-                            "source_partition": sp,
-                            "min_lsn": off["min_lsn"],
-                            "max_lsn": off["max_lsn"],
-                            "rows_inserted": n_ins,
-                            "rows_updated": 0,
-                            "rows_deleted": n_del,
-                            "rebases": rebases,
-                            "committed_at": now,
-                        }
-                    )
-                ins = sum(r["rows_inserted"] for r in lineage_rows)
-                dele = sum(r["rows_deleted"] for r in lineage_rows)
-
-            fence = None
-            if epoch_id is not None:
-                fence = {"epoch_id": int(epoch_id), "max_lsn": int(batch_max_lsn)}
-            new_snap = table.replace_buckets(
-                out.select(
-                    *payload_cols, OP_COL, VALID_FROM, VALID_TO, BUCKET_COL
-                ),
-                buckets,
-                fence=fence,
-                lineage=lineage_rows,
-                target_partitions=target_partitions,
-                base_snapshot=snap,
-            )
-        finally:
-            if collect_lineage:
-                out.unpersist()
-        if new_snap is None:
-            return MergeResult(applied=False)
-        return MergeResult(
-            applied=True,
-            snapshot_id=new_snap["snapshot_id"],
-            rows_inserted=ins,
-            rows_deleted=dele,
-            buckets_rewritten=buckets,
-            lineage=[
-                {**r, "snapshot_id": new_snap["snapshot_id"]}
-                for r in lineage_rows
-            ],
-            rebases=rebases,
+        change = F.when(
+            F.col("__src") == 1,
+            F.when(F.col(OP_COL) == "d", "deleted").otherwise("inserted"),
+        ).otherwise("unchanged")
+        return out.select(
+            *payload_cols, OP_COL, VALID_FROM, VALID_TO, BUCKET_COL,
+            "source_partition", change.alias(CHANGE_COL),
         )
 
     def compact(self, files_per_bucket: int = 4,

@@ -13,11 +13,16 @@ implemented as a bucket-pruned copy-on-write plan:
   1. fence check (epoch already applied → whole batch is a no-op);
   2. schema-evolution gate (add/widen allowed, incompatible rejected,
      nothing committed on rejection);
-  3. LSN dedup to one winner per key (battetl_spark.cdc.dedup — skew-safe);
-  4. prune: only buckets containing winner keys are read & rewritten;
-  5. union current rows (as pseudo-events at lsn=_last_lsn) with winners and
-     take max-lsn per key → late events (lsn <= _last_lsn) are no-ops;
-  6. atomic snapshot commit carrying fence + per-partition lineage.
+  3. prune: only buckets containing batch keys are read & rewritten;
+  4. union current rows (as pseudo-events at lsn=_last_lsn) with the events
+     and take max-lsn per key in ONE map-side-combined ``max_by`` aggregate
+     → batch dedup and late-event drop (lsn <= _last_lsn) in one shuffle;
+  5. atomic snapshot commit carrying fence + per-partition lineage.
+
+Steps 1, 2 and 5 (plus the envelope aggregate, lineage rows and the
+CommitConflict rebase loop) are ``_apply_fenced``, the one skeleton that the
+CoW and MOR merge modes and the SCD-2 history sink
+(battetl_spark.cdc.history) share; each mode supplies only its resolve.
 
 Scale: cost ∝ (batch size + touched-bucket bytes). num_buckets is the knob —
 at 100 TB with 4096 buckets a batch touching 1% of conversations reads/writes
@@ -28,16 +33,26 @@ nothing iterates rows on the driver.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from battetl_spark.cdc.dedup import lww_winners
-from battetl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr, utc_now_iso
+from battetl_spark.lake.table import (
+    BUCKET_COL,
+    CommitConflict,
+    LakeTable,
+    bucket_expr,
+    utc_now_iso,
+)
 from battetl_spark.schemas import DELETED_COL, KEY_COLS, LAST_LSN_COL
 
 ENVELOPE_COLS = ("lsn", "op", "source_partition")
+# per-row change tag a resolve step emits: inserted / updated / deleted /
+# unchanged — the lineage counts group on it
+CHANGE_COL = "__change"
 
 
 @dataclass
@@ -62,51 +77,25 @@ def _incoming_table_schema(events: DataFrame) -> T.StructType:
     return T.StructType(fields)
 
 
-# ------------------------------------------------ shared CoW/MOR building blocks
-
-def _project(df: DataFrame, payload_cols, by_name, snap) -> DataFrame:
-    """Event batch → evolved payload casts + envelope + bucket id."""
-    return df.select(
-        *[
-            F.col(c).cast(by_name[c].dataType).alias(c)
-            if c in df.columns
-            else F.lit(None).cast(by_name[c].dataType).alias(c)
-            for c in payload_cols
-        ],
-        F.col("lsn"),
-        F.col("op"),
-        F.col("source_partition"),
-    ).withColumn(BUCKET_COL, bucket_expr(snap["bucket_key"], snap["num_buckets"]))
-
-
-def _affected_buckets(slim: DataFrame) -> tuple[list[int], int]:
-    """(sorted bucket ids, batch max lsn) from a column-pruned (bucket, lsn)
-    frame — ONE tiny map-side-combined aggregate job."""
-    rows = slim.groupBy(BUCKET_COL).agg(F.max("lsn").alias("mx")).collect()
-    return sorted(r[0] for r in rows), max((r["mx"] for r in rows), default=0)
-
-
-def _partition_offsets(events: DataFrame) -> dict:
-    """Per-source-partition (min_lsn, max_lsn) — the lineage offset frame."""
-    return {
-        r["source_partition"]: r
-        for r in events.groupBy("source_partition")
-        .agg(F.min("lsn").alias("min_lsn"), F.max("lsn").alias("max_lsn"))
-        .collect()
-    }
-
+# ------------------------------------------------------ the shared skeleton
 
 def _envelope_stats(slim: DataFrame) -> tuple[list[int], int, dict]:
-    """``_affected_buckets`` + ``_partition_offsets`` from one
-    (bucket, lsn, source_partition) envelope projection in ONE collect job
-    (round 6: the fused-with-lineage path paid two driver-synchronous
-    aggregate jobs over the same tiny frame — each a full job round-trip
-    per merge batch). Both aggregates are map-side-combined; the union just
-    shares the job. Values are identical to the separate calls."""
+    """(sorted bucket ids, batch max lsn, per-source-partition offsets) from
+    the envelope projection (bucket, lsn[, source_partition]) in ONE collect
+    job. Without a ``source_partition`` column (lineage off) the plan is the
+    single map-side-combined (bucket, max lsn) aggregate and the offsets are
+    empty; with it the per-partition (min, max) lsn aggregate is unioned in
+    so both share the job (one collect per batch, not two)."""
+    per_bucket = slim.groupBy(BUCKET_COL).agg(F.max("lsn").alias("max_lsn"))
+    if "source_partition" not in slim.columns:
+        rows = per_bucket.collect()
+        return (
+            sorted(r[0] for r in rows),
+            max((r["max_lsn"] for r in rows), default=0),
+            {},
+        )
     rows = (
-        slim.groupBy(BUCKET_COL)
-        .agg(F.max("lsn").alias("max_lsn"))
-        .select(
+        per_bucket.select(
             F.lit(0).alias("__g"),
             F.col(BUCKET_COL).alias("__b"),
             F.lit(None).cast("int").alias("source_partition"),
@@ -128,187 +117,181 @@ def _envelope_stats(slim: DataFrame) -> tuple[list[int], int, dict]:
     )
     buckets = sorted(r["__b"] for r in rows if r["__g"] == 0)
     mx = max((r["max_lsn"] for r in rows if r["__g"] == 0), default=0)
-    offsets = {
-        r["source_partition"]: r for r in rows if r["__g"] == 1
-    }
+    offsets = {r["source_partition"]: r for r in rows if r["__g"] == 1}
     return buckets, mx, offsets
 
 
-def merge_apply(
-    table: LakeTable,
-    events: DataFrame,
-    epoch_id: int | None = None,
-    key_cols: list[str] | None = None,
-    dedup_strategy: str = "fused",
-    salt_buckets: int = 32,
-    collect_lineage: bool = True,
-    target_partitions: int | None = None,
-    conflict_retries: int = 2,
-    mode: str = "cow",
-) -> MergeResult:
-    """Apply one batch of change events to the table, exactly once.
-
-    ``mode``:
-    - ``cow`` (default): copy-on-write — read the touched buckets, resolve
-      LWW against current rows, rewrite those buckets. Write cost ∝ batch +
-      touched-bucket bytes; reads stay resolve-free.
-    - ``mor``: merge-on-read — dedup the batch to one winner per key and
-      APPEND the winners as delta files, never reading existing data. Write
-      cost ∝ batch bytes only (the ingest-side answer when hot buckets make
-      CoW rewrite amplification dominate at 100 TB); scans of delta-bearing
-      buckets pay a per-key LWW resolve until ``table.compact()`` folds
-      deltas into base files. Same fences/exactly-once; late events still
-      lose at read time via the same (lsn, base-wins-ties) order. Lineage
-      in this mode counts batch winners (upserts as rows_inserted, deletes
-      as rows_deleted, rows_updated = 0): classifying insert-vs-update
-      exactly would require reading current rows — the very work MOR defers.
-
-    A concurrent writer (another merge, a compaction) that lands on an
-    overlapping bucket between our scan and our commit aborts the commit
-    with CommitConflict; the merge then RE-RUNS against the fresh snapshot
-    (up to ``conflict_retries`` times) — a rebase, never a blind re-apply,
-    so no committed row is ever overwritten from stale data.
-
-    ``epoch_id`` fences the commit: if this epoch is already in the table's
-    fence map the batch is skipped entirely (idempotent replay). With
-    epoch_id=None the merge still applies (ad-hoc batch mode) but has no
-    replay protection.
-
-    ``dedup_strategy``:
-    - ``fused`` (default): batch dedup and table-resolution happen in ONE
-      key-shuffled aggregation (the resolve max_by already picks the max-lsn
-      event per key; a separate pre-dedup shuffle is redundant). Affected
-      buckets come from a column-pruned (bucket, max lsn) aggregate over the
-      raw events — a tiny map-side-combined shuffle, not a payload shuffle.
-    - ``agg`` / ``salted`` / ``window``: pre-winnow with that
-      battetl_spark.cdc.dedup strategy first (two shuffles; ``salted`` is
-      the explicit two-phase skew path, equivalence-tested).
-    """
-    from battetl_spark.lake.table import CommitConflict
-
-    if mode == "mor":
-        # append-only commit: commutes with concurrent appends, the commit's
-        # own optimistic retry suffices — no rebase loop needed
-        return _merge_apply_mor(
-            table, events, epoch_id, key_cols, dedup_strategy, salt_buckets,
-            collect_lineage, target_partitions,
-        )
-    if mode != "cow":
-        raise ValueError(f"unknown merge mode {mode!r} (cow | mor)")
-
-    last: CommitConflict | None = None
-    for attempt in range(conflict_retries + 1):
-        try:
-            return _merge_apply_once(
-                table, events, epoch_id, key_cols, dedup_strategy,
-                salt_buckets, collect_lineage, target_partitions,
-                rebases=attempt,
-            )
-        except CommitConflict as e:
-            last = e  # rebase: everything below re-derives from a fresh snapshot
-    raise last
+def _lineage_rows(
+    tagged: DataFrame, offsets: dict, epoch_id: int | None, rebases: int
+) -> list[dict]:
+    """One lineage row per source partition: its lsn offsets plus the
+    batch's change-tag counts (one groupBy(source_partition, tag) job)."""
+    changes = {
+        (r["source_partition"], r[CHANGE_COL]): r["n"]
+        for r in tagged.filter(F.col(CHANGE_COL) != "unchanged")
+        .groupBy("source_partition", CHANGE_COL)
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    now = utc_now_iso()
+    return [
+        {
+            "epoch_id": -1 if epoch_id is None else int(epoch_id),
+            "source_partition": sp,
+            "min_lsn": off["min_lsn"],
+            "max_lsn": off["max_lsn"],
+            "rows_inserted": changes.get((sp, "inserted"), 0),
+            "rows_updated": changes.get((sp, "updated"), 0),
+            "rows_deleted": changes.get((sp, "deleted"), 0),
+            "rebases": rebases,
+            "committed_at": now,
+        }
+        for sp, off in sorted(offsets.items(), key=lambda kv: (kv[0] is None, kv[0]))
+    ]
 
 
-def _merge_apply_mor(
+def _apply_fenced(
     table: LakeTable,
     events: DataFrame,
     epoch_id: int | None,
-    key_cols: list[str] | None,
-    dedup_strategy: str,
-    salt_buckets: int,
+    incoming: T.StructType,
+    resolve,
+    *,
+    delta: bool = False,
     collect_lineage: bool,
     target_partitions: int | None,
+    conflict_retries: int,
 ) -> MergeResult:
-    """Merge-on-read apply: batch-local LWW winners appended as delta files.
+    """Apply one change-event batch exactly once: the skeleton every apply
+    mode shares (CoW and MOR merge, SCD-2 history).
 
-    ONE key shuffle over the batch (not the bucket) — the resolve against
-    existing rows is deferred to scan()/compact(). Fence, schema gate,
-    dedup strategies (``salted`` for hot-key batches) and lineage offsets
-    behave exactly like the CoW path."""
-    key_cols = key_cols or KEY_COLS
+    ``resolve(schema, snap, buckets)`` is the mode: it returns the rows to
+    commit (BUCKET_COL included) plus ``source_partition`` and the
+    CHANGE_COL tag. ``delta`` picks the commit: False rewrites the touched
+    buckets (``replace_buckets``, conflict-detected against the scanned
+    snapshot), True appends delta files (``append_delta_buckets``).
+
+    A concurrent writer that lands on an overlapping bucket between our scan
+    and our commit aborts the commit with CommitConflict; the apply then
+    RE-RUNS against the fresh snapshot (up to ``conflict_retries`` times) —
+    a rebase, never a blind re-apply. Delta appends commute with concurrent
+    writers and never conflict."""
+    last: CommitConflict | None = None
+    for attempt in range(conflict_retries + 1):
+        try:
+            return _apply_fenced_once(
+                table, events, epoch_id, incoming, resolve, delta,
+                collect_lineage, target_partitions, rebases=attempt,
+            )
+        except CommitConflict as e:
+            last = e  # rebase: everything re-derives from a fresh snapshot
+    raise last
+
+
+def _apply_fenced_once(
+    table: LakeTable,
+    events: DataFrame,
+    epoch_id: int | None,
+    incoming: T.StructType,
+    resolve,
+    delta: bool,
+    collect_lineage: bool,
+    target_partitions: int | None,
+    rebases: int,
+) -> MergeResult:
     if epoch_id is not None and table.has_fence(epoch_id):
         return MergeResult(applied=False)
 
-    evolved = table.evolve_schema(_incoming_table_schema(events))
+    # -- schema-evolution gate (atomic; raises cleanly on incompatibility) --
+    schema = table.evolve_schema(incoming)
     snap = table.snapshot()
-    payload_cols = [f.name for f in evolved.fields if not f.name.startswith("_")]
-    by_name = {f.name: f for f in evolved.fields}
 
-    offsets: dict | None = None
+    # affected buckets + fence max (+ lineage offsets) from a column-pruned
+    # scan of the raw batch: only the envelope reaches the shuffle
+    envelope = [
+        bucket_expr(snap["bucket_key"], snap["num_buckets"]).alias(BUCKET_COL),
+        "lsn",
+    ]
     if collect_lineage:
-        # one job: affected buckets + fence max + lineage offsets together
-        buckets, batch_max_lsn, offsets = _envelope_stats(
-            events.select(
-                bucket_expr(
-                    snap["bucket_key"], snap["num_buckets"]
-                ).alias(BUCKET_COL),
-                "lsn",
-                "source_partition",
-            )
-        )
-    else:
-        buckets, batch_max_lsn = _affected_buckets(
-            events.select(
-                bucket_expr(
-                    snap["bucket_key"], snap["num_buckets"]
-                ).alias(BUCKET_COL),
-                "lsn",
-            )
-        )
+        envelope.append("source_partition")
+    buckets, batch_max_lsn, offsets = _envelope_stats(events.select(*envelope))
     if not buckets:
         return MergeResult(applied=False)
 
-    if dedup_strategy == "fused":
-        # batch-local LWW: one winner per key (same max_by fold, batch-only)
-        projected = _project(events, payload_cols, by_name, snap)
-        non_key = [c for c in projected.columns if c not in key_cols]
-        winners = (
-            projected.groupBy(*key_cols)
-            .agg(F.max_by(F.struct(*non_key), F.col("lsn")).alias("__w"))
-            .select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in non_key])
-        )
-    else:
-        # explicit strategy (agg / salted / window) — same pre-winnow the
-        # CoW path honors; never silently discard a requested skew path
-        winners = _project(
-            lww_winners(events, key_cols, "lsn", strategy=dedup_strategy,
-                        salt_buckets=salt_buckets),
-            payload_cols, by_name, snap,
-        )
-
-    lineage_rows: list[dict] = []
-    ins = dele = 0
+    tagged = resolve(schema, snap, buckets)
     if collect_lineage:
-        winners = winners.persist()
-        changes = {
-            (r["source_partition"], r["__kind"]): r["n"]
-            for r in winners.withColumn(
-                "__kind", F.when(F.col("op") == "d", "delete").otherwise("upsert")
+        tagged = tagged.persist()  # reused by the counts + the write
+    try:
+        lineage = (
+            _lineage_rows(tagged, offsets, epoch_id, rebases)
+            if collect_lineage
+            else []
+        )
+        fence = None
+        if epoch_id is not None:
+            fence = {"epoch_id": int(epoch_id), "max_lsn": int(batch_max_lsn)}
+        rows = tagged.drop("source_partition", CHANGE_COL)
+        if delta:
+            new_snap = table.append_delta_buckets(
+                rows,
+                fence=fence,
+                lineage=lineage,
+                target_partitions=target_partitions,
+                schema_id=snap["current_schema_id"],
             )
-            .groupBy("source_partition", "__kind")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        now = utc_now_iso()
-        for sp, off in sorted(offsets.items(), key=lambda kv: (kv[0] is None, kv[0])):
-            lineage_rows.append(
-                {
-                    "epoch_id": -1 if epoch_id is None else int(epoch_id),
-                    "source_partition": sp,
-                    "min_lsn": off["min_lsn"],
-                    "max_lsn": off["max_lsn"],
-                    "rows_inserted": changes.get((sp, "upsert"), 0),
-                    "rows_updated": 0,  # insert/update split needs a read — deferred
-                    "rows_deleted": changes.get((sp, "delete"), 0),
-                    "rebases": 0,
-                    "committed_at": now,
-                }
+        else:
+            new_snap = table.replace_buckets(
+                rows,
+                buckets,
+                fence=fence,
+                lineage=lineage,
+                target_partitions=target_partitions,
+                base_snapshot=snap,  # conflict-detect: abort if a concurrent
+                # writer changed any of these buckets since we scanned them
             )
-        ins = sum(r["rows_inserted"] for r in lineage_rows)
-        dele = sum(r["rows_deleted"] for r in lineage_rows)
+    finally:
+        if collect_lineage:
+            tagged.unpersist()
+    if new_snap is None:
+        # fence appeared between the top-of-function check and the commit
+        # (a replayed epoch raced us): the batch was discarded — report
+        # honestly; the just-written orphan files are reclaimed by
+        # vacuum_files.
+        return MergeResult(applied=False)
+    return MergeResult(
+        applied=True,
+        snapshot_id=new_snap["snapshot_id"],
+        rows_inserted=sum(r["rows_inserted"] for r in lineage),
+        rows_updated=sum(r["rows_updated"] for r in lineage),
+        rows_deleted=sum(r["rows_deleted"] for r in lineage),
+        buckets_rewritten=buckets,
+        lineage=[{**r, "snapshot_id": new_snap["snapshot_id"]} for r in lineage],
+        rebases=rebases,
+    )
 
-    dead = F.col("op") == "d"
-    out = winners.select(
+
+# ------------------------------------------------------- CoW / MOR resolves
+
+def _project(df: DataFrame, payload_cols, by_name, snap) -> DataFrame:
+    """Event batch → evolved payload casts + envelope + bucket id."""
+    return df.select(
+        *[
+            F.col(c).cast(by_name[c].dataType).alias(c)
+            if c in df.columns
+            else F.lit(None).cast(by_name[c].dataType).alias(c)
+            for c in payload_cols
+        ],
+        F.col("lsn"),
+        F.col("op"),
+        F.col("source_partition"),
+    ).withColumn(BUCKET_COL, bucket_expr(snap["bucket_key"], snap["num_buckets"]))
+
+
+def _row_images(df, key_cols, payload_cols, by_name, dead, change) -> DataFrame:
+    """Resolved events → table rows (+ source_partition, change tag).
+    Deletes are written as tombstones (payload nulled, _deleted=true) so the
+    delete's lsn keeps fencing later-arriving older updates."""
+    return df.select(
         *[
             F.col(c)
             if c in key_cols
@@ -320,229 +303,133 @@ def _merge_apply_mor(
         F.col("lsn").alias(LAST_LSN_COL),
         dead.alias(DELETED_COL),
         F.col(BUCKET_COL),
+        F.col("source_partition"),
+        change.alias(CHANGE_COL),
     )
-    fence = None
-    if epoch_id is not None:
-        fence = {"epoch_id": int(epoch_id), "max_lsn": int(batch_max_lsn)}
-    try:
-        new_snap = table.append_delta_buckets(
-            out,
-            fence=fence,
-            lineage=lineage_rows,
-            target_partitions=target_partitions,
-            schema_id=snap["current_schema_id"],
+
+
+def _resolve_cow(table, events, key_cols, schema, snap, buckets) -> DataFrame:
+    """Copy-on-write: current rows of the touched buckets ∪ the events, one
+    LWW winner per key in ONE key-shuffled ``max_by`` aggregation (batch
+    dedup and table resolution together; max_by combines map-side, so a hot
+    key costs one partial row per task)."""
+    payload_cols = [f.name for f in schema.fields if not f.name.startswith("_")]
+    by_name = {f.name: f for f in schema.fields}
+
+    # current rows compete at lsn = _last_lsn; tombstones compete too
+    # (op 'cd') so late updates lose to an already-applied delete.
+    current = table.scan(buckets, snap, include_deleted=True).select(
+        *payload_cols,
+        F.col(LAST_LSN_COL).alias("lsn"),
+        F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("cd"))
+        .otherwise(F.lit("c"))
+        .alias("op"),
+        F.lit(None).cast("int").alias("source_partition"),
+        bucket_expr(snap["bucket_key"], snap["num_buckets"]).alias(BUCKET_COL),
+    )
+    combined = current.unionByName(_project(events, payload_cols, by_name, snap))
+    non_key = [c for c in combined.columns if c not in key_cols]
+    # lsn ties (an event replayed at exactly the applied _last_lsn) must
+    # resolve to the current row — a no-op, not a counted update.
+    order = F.struct(
+        F.col("lsn"), F.col("op").isin("c", "cd").cast("int").alias("__prio")
+    )
+    resolved = (
+        combined.groupBy(*key_cols)
+        .agg(
+            F.max_by(F.struct(*non_key), order).alias("__w"),
+            F.max(F.when(F.col("op") == "c", F.col("lsn"))).alias("__cur_lsn"),
         )
-    finally:
-        if collect_lineage:
-            winners.unpersist()
-    if new_snap is None:
-        return MergeResult(applied=False)  # fence race: batch discarded
-    return MergeResult(
-        applied=True,
-        snapshot_id=new_snap["snapshot_id"],
-        rows_inserted=ins,
-        rows_deleted=dele,
-        buckets_rewritten=buckets,
-        lineage=[
-            {**r, "snapshot_id": new_snap["snapshot_id"]} for r in lineage_rows
-        ],
+        .select(
+            *key_cols,
+            *[F.col(f"__w.{c}").alias(c) for c in non_key],
+            F.col("__cur_lsn"),
+        )
+    )
+    had_live = F.col("__cur_lsn").isNotNull()
+    change = (
+        F.when(F.col("op").isin("c", "cd"), F.lit("unchanged"))
+        .when(F.col("op") == "d", F.when(had_live, "deleted").otherwise("unchanged"))
+        .when(had_live, F.lit("updated"))
+        .otherwise(F.lit("inserted"))
+    )
+    return _row_images(
+        resolved, key_cols, payload_cols, by_name,
+        F.col("op").isin("d", "cd"), change,
     )
 
 
-def _merge_apply_once(
+def _resolve_mor(events, key_cols, schema, snap, buckets) -> DataFrame:
+    """Merge-on-read: batch-local LWW winners only (one key shuffle over the
+    batch, not the bucket); the resolve against existing rows is deferred to
+    scan()/compact(). Winners count as inserted or deleted — classifying
+    insert-vs-update would need the read MOR defers."""
+    payload_cols = [f.name for f in schema.fields if not f.name.startswith("_")]
+    by_name = {f.name: f for f in schema.fields}
+    winners = lww_winners(_project(events, payload_cols, by_name, snap), key_cols)
+    dead = F.col("op") == "d"
+    return _row_images(
+        winners, key_cols, payload_cols, by_name,
+        dead, F.when(dead, "deleted").otherwise("inserted"),
+    )
+
+
+def merge_apply(
     table: LakeTable,
     events: DataFrame,
-    epoch_id: int | None,
-    key_cols: list[str] | None,
-    dedup_strategy: str,
-    salt_buckets: int,
-    collect_lineage: bool,
-    target_partitions: int | None,
-    rebases: int = 0,
+    epoch_id: int | None = None,
+    key_cols: list[str] | None = None,
+    collect_lineage: bool = True,
+    target_partitions: int | None = None,
+    conflict_retries: int = 2,
+    mode: str = "cow",
 ) -> MergeResult:
+    """Apply one batch of change events to the table, exactly once.
+
+    ``mode``:
+    - ``cow`` (default): copy-on-write — read the touched buckets, resolve
+      LWW against current rows, rewrite those buckets. Write cost ∝ batch +
+      touched-bucket bytes; reads stay resolve-free. Lineage counts rows
+      inserted, updated and deleted against the current state (late events
+      and no-op deletes count nowhere).
+    - ``mor``: merge-on-read — dedup the batch to one winner per key and
+      APPEND the winners as delta files, never reading existing data. Write
+      cost ∝ batch bytes only (the ingest-side answer when hot buckets make
+      CoW rewrite amplification dominate at 100 TB); scans of delta-bearing
+      buckets pay a per-key LWW resolve until ``table.compact()`` folds
+      deltas into base files. Same fences/exactly-once; late events still
+      lose at read time via the same (lsn, base-wins-ties) order. Lineage
+      in this mode counts batch winners (upserts as rows_inserted, deletes
+      as rows_deleted, rows_updated = 0): classifying insert-vs-update
+      exactly would require reading current rows — the very work MOR defers.
+
+    Both modes run ``_apply_fenced`` (fence check, schema gate, envelope
+    aggregate, lineage rows, fenced commit, CommitConflict rebase up to
+    ``conflict_retries`` times); the SCD-2 history sink runs it too.
+
+    ``epoch_id`` fences the commit: if this epoch is already in the table's
+    fence map the batch is skipped entirely (idempotent replay). With
+    epoch_id=None the merge still applies (ad-hoc batch mode) but has no
+    replay protection.
+    """
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"unknown merge mode {mode!r} (cow | mor)")
     key_cols = key_cols or KEY_COLS
-    if epoch_id is not None and table.has_fence(epoch_id):
-        return MergeResult(applied=False)
-
-    # -- schema-evolution gate (atomic; raises cleanly on incompatibility) --
-    evolved = table.evolve_schema(_incoming_table_schema(events))
-    snap = table.snapshot()
-    payload_cols = [f.name for f in evolved.fields if not f.name.startswith("_")]
-    by_name = {f.name: f for f in evolved.fields}
-
-    persisted = None
-    offsets = None
-    if dedup_strategy == "fused":
-        winners = _project(events, payload_cols, by_name, snap)
-        # affected buckets + fence max from a column-pruned scan of the raw
-        # batch (only bucket_key + lsn reach the shuffle, post-combine);
-        # with lineage on, the per-partition offsets share the same job
-        if collect_lineage:
-            buckets, batch_max_lsn, offsets = _envelope_stats(
-                events.select(
-                    bucket_expr(
-                        snap["bucket_key"], snap["num_buckets"]
-                    ).alias(BUCKET_COL),
-                    "lsn",
-                    "source_partition",
-                )
-            )
-        else:
-            buckets, batch_max_lsn = _affected_buckets(
-                events.select(
-                    bucket_expr(
-                        snap["bucket_key"], snap["num_buckets"]
-                    ).alias(BUCKET_COL),
-                    "lsn",
-                )
-            )
+    if mode == "mor":
+        resolve = partial(_resolve_mor, events, key_cols)
     else:
-        winners = _project(
-            lww_winners(events, key_cols, "lsn", strategy=dedup_strategy,
-                        salt_buckets=salt_buckets),
-            payload_cols, by_name, snap,
-        ).persist()
-        persisted = winners
-    try:
-        if dedup_strategy != "fused":
-            buckets, batch_max_lsn = _affected_buckets(
-                winners.select(BUCKET_COL, "lsn")
-            )
-        if not buckets:
-            return MergeResult(applied=False)
-
-        # current rows compete at lsn = _last_lsn; tombstones compete too
-        # (op 'cd') so late updates lose to an already-applied delete.
-        current = table.scan(buckets, snap, include_deleted=True).select(
-            *payload_cols,
-            F.col(LAST_LSN_COL).alias("lsn"),
-            F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("cd"))
-            .otherwise(F.lit("c"))
-            .alias("op"),
-            F.lit(None).cast("int").alias("source_partition"),
-            bucket_expr(snap["bucket_key"], snap["num_buckets"]).alias(BUCKET_COL),
-        )
-
-        # -- cross-batch LWW: one winner per key among {current row, events} --
-        combined = current.unionByName(winners)
-        non_key = [c for c in combined.columns if c not in key_cols]
-        # lsn ties (an event replayed at exactly the applied _last_lsn) must
-        # resolve to the current row — a no-op, not a counted update.
-        order = F.struct(
-            F.col("lsn"), F.col("op").isin("c", "cd").cast("int").alias("__prio")
-        )
-        resolved = (
-            combined.groupBy(*key_cols)
-            .agg(
-                F.max_by(F.struct(*non_key), order).alias("__w"),
-                F.max(F.when(F.col("op") == "c", F.col("lsn"))).alias("__cur_lsn"),
-            )
-            .select(
-                *key_cols,
-                *[F.col(f"__w.{c}").alias(c) for c in non_key],
-                F.col("__cur_lsn"),
-            )
-        )
-        had_live = F.col("__cur_lsn").isNotNull()
-        resolved = resolved.withColumn(
-            "__change",
-            F.when(F.col("op").isin("c", "cd"), F.lit("unchanged"))
-            .when(F.col("op") == "d", F.when(had_live, "deleted").otherwise("unchanged"))
-            .when(had_live, F.lit("updated"))
-            .otherwise(F.lit("inserted")),
-        )
-        if collect_lineage:
-            resolved = resolved.persist()  # reused by counts + write
-
-        lineage_rows: list[dict] = []
-        ins = upd = dele = 0
-        if collect_lineage:
-            if offsets is None:  # non-fused strategies: winners-side slim
-                offsets = _partition_offsets(events)
-            changes = {
-                (r["source_partition"], r["__change"]): r["n"]
-                for r in resolved.filter(F.col("__change") != "unchanged")
-                .groupBy("source_partition", "__change")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            now = utc_now_iso()
-            for sp, off in sorted(
-                offsets.items(), key=lambda kv: (kv[0] is None, kv[0])
-            ):
-                lineage_rows.append(
-                    {
-                        "epoch_id": -1 if epoch_id is None else int(epoch_id),
-                        "source_partition": sp,
-                        "min_lsn": off["min_lsn"],
-                        "max_lsn": off["max_lsn"],
-                        "rows_inserted": changes.get((sp, "inserted"), 0),
-                        "rows_updated": changes.get((sp, "updated"), 0),
-                        "rows_deleted": changes.get((sp, "deleted"), 0),
-                        "rebases": rebases,
-                        "committed_at": now,
-                    }
-                )
-            ins = sum(r["rows_inserted"] for r in lineage_rows)
-            upd = sum(r["rows_updated"] for r in lineage_rows)
-            dele = sum(r["rows_deleted"] for r in lineage_rows)
-
-        # deletes are written as tombstones (payload nulled, _deleted=true)
-        # so the delete's lsn keeps fencing later-arriving older updates.
-        dead = F.col("op").isin("d", "cd")
-        out = resolved.select(
-            *[
-                F.col(c)
-                if c in key_cols
-                else F.when(dead, F.lit(None).cast(by_name[c].dataType))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in payload_cols
-            ],
-            F.col("lsn").alias(LAST_LSN_COL),
-            dead.alias(DELETED_COL),
-            F.col(BUCKET_COL),
-        )
-
-        fence = None
-        if epoch_id is not None:
-            fence = {"epoch_id": int(epoch_id), "max_lsn": int(batch_max_lsn)}
-
-        new_snap = table.replace_buckets(
-            out,
-            buckets,
-            fence=fence,
-            lineage=lineage_rows,
-            target_partitions=target_partitions,
-            base_snapshot=snap,  # conflict-detect: abort if a concurrent
-            # writer changed any of these buckets since we scanned them
-        )
-        if new_snap is None:
-            # fence appeared between the top-of-function check and the commit
-            # (a replayed epoch raced us): the batch was discarded — report
-            # honestly; the just-written orphan files are reclaimed by
-            # vacuum_files.
-            return MergeResult(applied=False)
-        return MergeResult(
-            applied=True,
-            snapshot_id=new_snap["snapshot_id"],
-            rows_inserted=ins,
-            rows_updated=upd,
-            rows_deleted=dele,
-            buckets_rewritten=buckets,
-            lineage=[
-                {**r, "snapshot_id": new_snap["snapshot_id"]} for r in lineage_rows
-            ],
-            rebases=rebases,
-        )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-        if collect_lineage:
-            try:
-                resolved.unpersist()
-            except NameError:
-                pass
+        resolve = partial(_resolve_cow, table, events, key_cols)
+    return _apply_fenced(
+        table,
+        events,
+        epoch_id,
+        _incoming_table_schema(events),
+        resolve,
+        delta=mode == "mor",
+        collect_lineage=collect_lineage,
+        target_partitions=target_partitions,
+        conflict_retries=conflict_retries,
+    )
 
 
 def delete_where(

@@ -83,9 +83,7 @@ class CdcStream:
         self,
         table: LakeTable,
         checkpoint_dir: str,
-        dedup_strategy: str = "fused",
         merge_mode: str = "cow",
-        salt_buckets: int = 32,
         collect_lineage: bool = True,
         on_batch=None,
         fail_injector=None,
@@ -97,12 +95,10 @@ class CdcStream:
     ):
         self.table = table
         self.checkpoint_dir = checkpoint_dir
-        self.dedup_strategy = dedup_strategy
         # "mor" appends delta files per batch (write ∝ batch bytes) and lets
         # auto-compaction fold them — pair with auto_compact_files to bound
         # the read-side resolve
         self.merge_mode = merge_mode
-        self.salt_buckets = salt_buckets
         self.collect_lineage = collect_lineage
         self.on_batch = on_batch
         self.fail_injector = fail_injector  # (epoch_id, phase) -> None | raise
@@ -148,8 +144,6 @@ class CdcStream:
             self.table,
             batch_df,
             epoch_id=epoch_id,
-            dedup_strategy=self.dedup_strategy,
-            salt_buckets=self.salt_buckets,
             collect_lineage=self.collect_lineage,
             mode=self.merge_mode,
         )

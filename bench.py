@@ -30,10 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_cdc_merge(spark, n_events: int, n_batches: int = 4, num_buckets: int = 64,
-                  dedup_strategy: str = "fused", work_dir: str | None = None,
-                  mode: str = "cow") -> dict:
-    # "fused" = the engine-default single-shuffle merge (dedup folded into
-    # the resolve aggregation) — the flagship path CdcStream/submit_job run.
+                  work_dir: str | None = None, mode: str = "cow") -> dict:
+    # the engine's single-shuffle merge (dedup folded into the resolve
+    # aggregation) — the flagship path CdcStream/submit_job run.
     # mode="mor" benches the merge-on-read ingest path: winners appended as
     # delta files (write ∝ batch bytes), one fold-compaction at the end
     # (timed separately) so the final state check reads base files.
@@ -63,8 +62,7 @@ def run_cdc_merge(spark, n_events: int, n_batches: int = 4, num_buckets: int = 6
         t0 = time.time()
         for i, d in enumerate(ev_dirs):
             merge_apply(table, spark.read.parquet(d), epoch_id=i,
-                        dedup_strategy=dedup_strategy, collect_lineage=False,
-                        mode=mode)
+                        collect_lineage=False, mode=mode)
         elapsed = time.time() - t0
         out = {
             "events": n_events,

@@ -9,6 +9,7 @@ of out-of-order batches, replay fencing, LSN time travel, and agreement of
 from __future__ import annotations
 
 import tempfile
+from datetime import datetime
 
 import pandas as pd
 import pytest
@@ -19,6 +20,7 @@ from battetl_spark.cdc import HistoryTable, history_rows, merge_apply
 from battetl_spark.cdc.history import OP_COL, VALID_FROM, VALID_TO
 from battetl_spark.lake import LakeTable
 from battetl_spark.schemas import (
+    CHANGE_EVENT_SCHEMA,
     KEY_COLS,
     LAST_LSN_COL,
     TRANSCRIPT_SCHEMA,
@@ -332,3 +334,94 @@ def test_history_schema_evolution(spark, events_pdf):
     with pytest.raises(SchemaCompatibilityError):
         h.apply(bad, epoch_id=2)
     assert h.table.snapshot()["version"] == v  # nothing committed
+
+
+def test_history_rebase_after_commit_race(spark, events_pdf):
+    """A history apply that loses its commit race to a rival apply on the
+    same buckets rebases onto the rival's commit: the rebase is reported on
+    the result and on every lineage row, and the history equals the batch
+    build over both batches."""
+    h = _new_hist(spark)
+    half = len(events_pdf) // 2
+    mine = _events_df(spark, events_pdf.iloc[:half].reset_index(drop=True))
+    rival = _events_df(spark, events_pdf.iloc[half:].reset_index(drop=True))
+    orig = h.table.replace_buckets
+    state = {"raced": False}
+
+    def racy(df, buckets, **kw):
+        if not state["raced"]:
+            state["raced"] = True  # set first: the rival apply re-enters racy
+            assert h.apply(rival, epoch_id=80).applied
+        return orig(df, buckets, **kw)
+
+    h.table.replace_buckets = racy
+    try:
+        res = h.apply(mine, epoch_id=81)
+    finally:
+        h.table.replace_buckets = orig
+    assert res.applied and res.rebases == 1
+    assert res.lineage and all(r["rebases"] == 1 for r in res.lineage)
+    expected = history_rows(_events_df(spark, events_pdf), KEY_COLS).toPandas()
+    assert_pdf_equal(_norm(h.history().toPandas()), _norm(expected),
+                     sort_cols=["conv_id", "turn_idx", VALID_FROM])
+
+
+def test_lineage_parity_across_apply_modes(spark, tmp_path):
+    """One batch with source partitions 0, 1 and NULL through CoW, MOR and
+    history: all three report the same per-partition lsn offsets, and each
+    counts changes as ``merge_apply`` documents — CoW against the current
+    rows, MOR as batch winners, history as new versions."""
+    base = pd.DataFrame(
+        {
+            "conv_id": ["c1", "c2"], "turn_idx": pd.Series([0, 0], dtype="int32"),
+            "role": "user",
+            "text": "base", "tool": None, "ts": pd.Timestamp("2026-01-01"),
+        }
+    )
+    batch = [  # (lsn, op, conv_id, source_partition)
+        (10, "u", "c1", 0),  # loses to lsn 11 on the same key
+        (11, "u", "c1", 1),  # updates a live row
+        (12, "d", "c2", 0),  # deletes a live row
+        (13, "i", "c3", 1),  # inserts
+        (14, "d", "c4", None),  # deletes a key that never existed
+        (15, "i", "c5", None),  # inserts
+    ]
+    events = spark.createDataFrame(
+        [
+            {"lsn": lsn, "op": op, "conv_id": conv, "turn_idx": 0,
+             "role": "user", "text": "new", "tool": None,
+             "ts": datetime(2026, 1, 2), "source_partition": sp}
+            for lsn, op, conv, sp in batch
+        ],
+        CHANGE_EVENT_SCHEMA,
+    )
+
+    def lineage_of(res):
+        assert res.applied
+        return {
+            r["source_partition"]: (
+                r["min_lsn"], r["max_lsn"],
+                r["rows_inserted"], r["rows_updated"], r["rows_deleted"],
+            )
+            for r in res.lineage
+        }
+
+    got = {}
+    for mode in ("cow", "mor"):
+        t = LakeTable.create(
+            spark, str(tmp_path / mode), TRANSCRIPT_TABLE_SCHEMA,
+            num_buckets=4, key_cols=KEY_COLS, sort_cols=KEY_COLS,
+        )
+        t.append(FX.table_rows_df(spark, base))
+        got[mode] = lineage_of(merge_apply(t, events, epoch_id=1, mode=mode))
+    got["history"] = lineage_of(_new_hist(spark).apply(events, epoch_id=1))
+
+    offsets = {0: (10, 12), 1: (11, 13), None: (14, 15)}
+    for mode, rows in got.items():
+        assert {sp: v[:2] for sp, v in rows.items()} == offsets, mode
+    counts = {mode: {sp: v[2:] for sp, v in rows.items()}
+              for mode, rows in got.items()}
+    # (inserted, updated, deleted) per source partition
+    assert counts["cow"] == {0: (0, 0, 1), 1: (1, 1, 0), None: (1, 0, 0)}
+    assert counts["mor"] == {0: (0, 0, 1), 1: (2, 0, 0), None: (1, 0, 1)}
+    assert counts["history"] == {0: (1, 0, 1), 1: (2, 0, 0), None: (1, 0, 1)}

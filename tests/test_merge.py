@@ -142,19 +142,6 @@ def test_delete_then_reinsert(spark, tmp_path, base_pdf):
     assert row.text.iloc[0] == "reborn" and row[LAST_LSN_COL].iloc[0] == 20
 
 
-def test_dedup_strategy_equivalence(spark, tmp_path, base_pdf, events_pdf):
-    """All dedup paths (fused single-shuffle default, pre-winnow agg,
-    explicit salted two-phase, window) must agree (north-star 4.3.1)."""
-    expected = FX.pandas_oracle_replay(base_pdf, events_pdf)
-    for strat in ("agg", "salted", "window"):
-        t = seeded_table(spark, tmp_path / strat, base_pdf)
-        merge_apply(
-            t, FX.change_events_df(spark, events_pdf), epoch_id=1,
-            dedup_strategy=strat,
-        )
-        assert_pdf_equal(table_state(t), expected, KEY_COLS)
-
-
 def test_only_touched_buckets_rewritten(spark, tmp_path, base_pdf):
     import pandas as pd
 
@@ -173,10 +160,10 @@ def test_only_touched_buckets_rewritten(spark, tmp_path, base_pdf):
 
 
 def test_envelope_stats_matches_separate_aggregates(spark):
-    """The fused envelope collect (round 6) must report exactly what the
-    two separate aggregates report: affected buckets + batch max lsn
-    (``_affected_buckets``) and per-source-partition lsn offsets
-    (``_partition_offsets``) — including a NULL source_partition."""
+    """The one envelope collect must report exactly what two plain
+    aggregates report: affected buckets + batch max lsn, and per-source-
+    partition lsn offsets — including a NULL source_partition. Without a
+    source_partition column (lineage off) it reports buckets + max only."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -197,11 +184,22 @@ def test_envelope_stats_matches_separate_aggregates(spark):
         "lsn",
         "source_partition",
     )
+    per_bucket = slim.groupBy(M.BUCKET_COL).agg(F.max("lsn").alias("mx")).collect()
+    ref_buckets = sorted(r[0] for r in per_bucket)
+    ref_mx = max(r["mx"] for r in per_bucket)
+    ref_off = {
+        r["source_partition"]: (r["lo"], r["hi"])
+        for r in ev.groupBy("source_partition")
+        .agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi"))
+        .collect()
+    }
+    assert None in ref_off and ref_mx == 30
+
     buckets, mx, offsets = M._envelope_stats(slim)
-    b2, mx2 = M._affected_buckets(slim.select(M.BUCKET_COL, "lsn"))
-    off2 = M._partition_offsets(ev)
-    assert buckets == b2 and mx == mx2
-    assert set(offsets) == set(off2)
-    for sp in off2:
-        assert offsets[sp]["min_lsn"] == off2[sp]["min_lsn"]
-        assert offsets[sp]["max_lsn"] == off2[sp]["max_lsn"]
+    assert buckets == ref_buckets and mx == ref_mx
+    assert {
+        sp: (o["min_lsn"], o["max_lsn"]) for sp, o in offsets.items()
+    } == ref_off
+
+    b2, mx2, off2 = M._envelope_stats(slim.select(M.BUCKET_COL, "lsn"))
+    assert b2 == ref_buckets and mx2 == ref_mx and off2 == {}

@@ -459,6 +459,16 @@ def test_minhash_auto_banding_bounds_candidates(spark):
     assert expected <= got
 
 
+def test_minhash_auto_banding_fewer_hashes_than_rows(spark, docs):
+    """num_hashes=1 fits no band of the starting rows_per_band: auto banding
+    returns the start with an empty banded frame instead of dividing by
+    zero, and the pair search finds nothing."""
+    sigs = TX.minhash_signatures(docs, num_hashes=1)
+    r, banded = TX._auto_rows_per_band(sigs, "doc_id", 1)
+    assert r == 2 and banded.count() == 0
+    assert TX.minhash_lsh_pairs(docs, num_hashes=1).count() == 0
+
+
 def test_minhash_auto_identical_below_budget(spark, docs):
     """On an ordinary corpus the default budget leaves r at 2 — auto mode
     must return EXACTLY the fixed-r=2 answer (the oracle-pinned path)."""
@@ -613,6 +623,17 @@ def test_embedding_incremental_equals_batch(spark, emb, tmp_path):
     again = idx.add_batch(corpus.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 0))
     assert again.count() == 0
     assert idx.table.scan().count() == corpus.count()
+
+
+def test_embedding_index_rejects_too_small_dim_hint(spark, emb, tmp_path):
+    """A dim hint below the true vector length must fail the batch loudly,
+    not silently drop positions >= dim from the signatures."""
+    from battetl_spark.analytics import EmbeddingIndex
+
+    idx = EmbeddingIndex.create(spark, str(tmp_path / "idx"))
+    vecs = emb.filter(F.col("vec_id") < 50)
+    with pytest.raises(Exception, match="dim hint 8"):
+        idx.add_batch(vecs, threshold=0.9, dim=8).collect()
 
 
 def test_incremental_corpus_cleaner_equals_batch(spark, docs, tmp_path):

@@ -6,7 +6,7 @@ Cluster usage (the production shape the engine targets):
   spark-submit --py-files engine.zip \
       --conf spark.sql.shuffle.partitions=<2-3x total cores> \
       tools/submit_job.py --events-dir s3://.../wal --table s3://.../transcripts \
-      --checkpoint s3://.../ckpt [--num-buckets 4096] [--dedup salted]
+      --checkpoint s3://.../ckpt [--num-buckets 4096] [--merge-mode mor]
 
 Local smoke (what the sandbox runs):
 
@@ -29,12 +29,6 @@ def main():
     ap.add_argument("--table", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument(
-        "--dedup",
-        choices=["fused", "agg", "salted", "window"],
-        default="fused",  # matches CdcStream/merge_apply's benchmarked default
-    )
-    ap.add_argument("--salt-buckets", type=int, default=32)
     ap.add_argument(
         "--merge-mode",
         choices=["cow", "mor"],
@@ -95,9 +89,7 @@ def main():
         )
 
     stream = CdcStream(
-        table, args.checkpoint, dedup_strategy=args.dedup,
-        merge_mode=args.merge_mode,
-        salt_buckets=args.salt_buckets, on_batch=report,
+        table, args.checkpoint, merge_mode=args.merge_mode, on_batch=report,
     )
     if args.source == "log":
         from battetl_spark.streaming import FilePartitionedLog
