@@ -33,25 +33,144 @@ rows bucketed by band-hash so the join co-locates without shuffling the
 index side — changes constants, not the shape, and is deliberately left
 out while the engine's lake format doesn't expose bucket metadata to
 Catalyst.
+
+The SimHash, embedding, n-gram and span indexes keep the same contract.
+``_SignatureIndex`` holds the steps all five share: the frozen-config
+lifecycle, the only-new-rows anti-join and the materialize-then-append
+commit. Blocking and verify come from the batch operators, so an index
+cannot drift from its batch counterpart.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from battetl_spark.analytics.cache import track as _track
+from battetl_spark.analytics.similarity import (
+    _bucket_frame,
+    _cosine_verify,
+    _exploded_bucket_rows,
+    _norm,
+    _plane_signature,
+)
 from battetl_spark.analytics.textops import (
     _banded,
     _exact_jaccard_over,
+    _hamming,
+    _prefix_rows,
+    _simhash_blocks,
+    _smaller_id_pairs,
     minhash_signatures_from_shingles,
     simhash_signatures,
     shingle_sets,
 )
 from battetl_spark.lake import LakeTable
+
+
+def _flag_new(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Index rows ∪ batch rows, tagged ``__new`` — the ``b`` side of
+    ``_later_member_pairs``."""
+    return old.withColumn("__new", F.lit(False)).unionByName(
+        new.withColumn("__new", F.lit(True))
+    )
+
+
+def _later_member_pairs(
+    a: DataFrame, b: DataFrame, on: list[str], *extra: Column
+) -> DataFrame:
+    """Candidate pairs between NEW rows ``a`` and ``b`` (rows flagged
+    ``__new``) that share every ``on`` key, as ``(id_a, id_b, *extra)`` with
+    ``id_a < id_b``; ``extra`` may reference the ``a.``/``b.`` sides.
+
+    New-new pairs keep a.doc_id < b.doc_id (each counted once); new-old
+    pairs match in either orientation — the later-ingested member owns the
+    pair, so no pair repeats across batches. Not deduplicated: a pair can
+    share several keys."""
+    a, b = a.alias("a"), b.alias("b")
+    later = (
+        ~F.col("b.__new") & (F.col("a.doc_id") != F.col("b.doc_id"))
+    ) | (F.col("b.__new") & (F.col("a.doc_id") < F.col("b.doc_id")))
+    cond = functools.reduce(
+        operator.and_,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in on] + [later],
+    )
+    return a.join(b, cond).select(
+        F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
+        F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
+        *extra,
+    )
+
+
+class _SignatureIndex:
+    """Lifecycle and ingest steps shared by the incremental index family.
+
+    Subclasses name their table layout: ``SCHEMA``, the id column ``ID``,
+    the LakeTable ``BUCKET_KEY`` and, when they have parameters frozen at
+    create time, the table property ``CONFIG_KEY`` that stores them as
+    JSON. Every batch must block identically or index-vs-batch joins would
+    never collide, so ``open()`` restores those parameters as attributes.
+    """
+
+    SCHEMA: T.StructType
+    ID = "doc_id"
+    BUCKET_KEY = "doc_id"
+    CONFIG_KEY: str | None = None
+
+    def __init__(self, spark: SparkSession, table: LakeTable):
+        self.spark = spark
+        self.table = table
+        if self.CONFIG_KEY:
+            cfg = json.loads(table.snapshot()["properties"][self.CONFIG_KEY])
+            for name, value in cfg.items():
+                setattr(self, name, int(value))
+
+    @classmethod
+    def _create(
+        cls, spark: SparkSession, path: str, num_buckets: int, **config: int
+    ) -> "_SignatureIndex":
+        properties = (
+            {cls.CONFIG_KEY: json.dumps({k: int(v) for k, v in config.items()})}
+            if cls.CONFIG_KEY
+            else None
+        )
+        return cls(
+            spark,
+            LakeTable.create(
+                spark, path, cls.SCHEMA, num_buckets=num_buckets,
+                bucket_key=cls.BUCKET_KEY, properties=properties,
+            ),
+        )
+
+    @classmethod
+    def open(cls, spark: SparkSession, path: str) -> "_SignatureIndex":
+        return cls(spark, LakeTable.load(spark, path))
+
+    def _new_rows(
+        self, index: DataFrame, df: DataFrame, id_col: str, payload: Column
+    ) -> DataFrame:
+        """Only-new-rows: ``(ID, payload)`` for the ids not yet in the
+        snapshot-pinned ``index`` (left_anti on the id projection alone, so
+        the index side prunes to one column). A replayed batch adds nothing
+        and reports nothing — reference Loader.py:144-234."""
+        return df.select(F.col(id_col).cast("long").alias(self.ID), payload).join(
+            index.select(self.ID), self.ID, "left_anti"
+        )
+
+    def _commit(self, out: DataFrame, to_store: DataFrame) -> DataFrame:
+        """Persist and count ``out`` BEFORE the index mutates, then append
+        ``to_store``: the returned frame reflects exactly the pre-append
+        index state regardless of when the caller collects it."""
+        out = _track(out)
+        out.count()
+        self.table.append(to_store)
+        return out
+
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -62,7 +181,7 @@ INDEX_SCHEMA = T.StructType(
 )
 
 
-class MinHashIndex:
+class MinHashIndex(_SignatureIndex):
     """Persisted minhash + shingle-set store keyed by doc_id.
 
     ``num_hashes`` / ``shingle_k`` / ``rows_per_band`` are fixed at create
@@ -71,16 +190,9 @@ class MinHashIndex:
     ``open()`` restores them.
     """
 
-    def __init__(self, spark: SparkSession, table: LakeTable):
-        self.spark = spark
-        self.table = table
-        props = table.snapshot()["properties"]
-        cfg = json.loads(props["minhash_index"])
-        self.num_hashes = int(cfg["num_hashes"])
-        self.shingle_k = int(cfg["shingle_k"])
-        self.rows_per_band = int(cfg["rows_per_band"])
+    SCHEMA = INDEX_SCHEMA
+    CONFIG_KEY = "minhash_index"
 
-    # ------------------------------------------------------------- lifecycle
     @classmethod
     def create(
         cls,
@@ -91,30 +203,13 @@ class MinHashIndex:
         rows_per_band: int = 2,
         num_buckets: int = 16,
     ) -> "MinHashIndex":
-        table = LakeTable.create(
-            spark,
-            path,
-            INDEX_SCHEMA,
-            num_buckets=num_buckets,
-            bucket_key="doc_id",
-            properties={
-                "minhash_index": json.dumps(
-                    {
-                        "num_hashes": int(num_hashes),
-                        "shingle_k": int(shingle_k),
-                        "rows_per_band": int(rows_per_band),
-                    }
-                )
-            },
+        return cls._create(
+            spark, path, num_buckets, num_hashes=num_hashes,
+            shingle_k=shingle_k, rows_per_band=rows_per_band,
         )
-        return cls(spark, table)
 
-    @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "MinHashIndex":
-        return cls(spark, LakeTable.load(spark, path))
-
-    def indexed_docs(self) -> DataFrame:
-        return self.table.scan().select("doc_id")
+    def _bands(self, sigs: DataFrame) -> DataFrame:
+        return _banded(sigs, "doc_id", self.num_hashes, self.rows_per_band)
 
     def ensure_indexed(self, docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> None:
@@ -123,11 +218,9 @@ class MinHashIndex:
         Pair discovery is separate (``pairs_involving``) so a caller can
         make its WHOLE ingest step crash-replayable: indexing and pair
         computation each re-run to the same state from any crash point."""
-        index = self.table.scan()
-        new_docs = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        ).join(index.select("doc_id"), "doc_id", "left_anti")
+        new_docs = self._new_rows(
+            self.table.scan(), docs, id_col, F.col(text_col).alias("text")
+        )
         # ONE persisted shingle build — both the signature derivation and
         # the appended sh column read it (unpersisted shingles would run
         # the corpus pipeline twice)
@@ -153,34 +246,14 @@ class MinHashIndex:
         ids = ids.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
         index = self.table.scan()
         sigs = index.select("doc_id", "minhash")
-        own = sigs.join(ids, "doc_id")
-        banded_own = _banded(
-            own, "doc_id", self.num_hashes, self.rows_per_band
-        ).alias("a")
-        banded_all = (
-            _banded(sigs, "doc_id", self.num_hashes, self.rows_per_band)
+        flagged = (
+            self._bands(sigs)
             .join(ids.withColumn("__new", F.lit(True)), "doc_id", "left")
             .withColumn("__new", F.coalesce(F.col("__new"), F.lit(False)))
-            .alias("b")
         )
-        cand = (
-            banded_own.join(
-                banded_all,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (
-                    (~F.col("b.__new")
-                     & (F.col("a.doc_id") != F.col("b.doc_id")))
-                    | (F.col("b.__new")
-                       & (F.col("a.doc_id") < F.col("b.doc_id")))
-                ),
-            )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        cand = _later_member_pairs(
+            self._bands(sigs.join(ids, "doc_id")), flagged, ["band", "bh"]
+        ).dropDuplicates(["id_a", "id_b"])
         return _exact_jaccard_over(
             cand, index.select("doc_id", "sh"), "doc_id", jaccard_threshold
         )
@@ -205,13 +278,9 @@ class MinHashIndex:
         exactly the pre-append index state regardless of when the caller
         collects it."""
         index = self.table.scan()  # snapshot-pinned: later appends invisible
-
-        # only-new-rows: drop already-indexed ids (left_anti on the tiny id
-        # projection — the index side prunes to one column)
-        new_docs = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
-        ).join(index.select("doc_id"), "doc_id", "left_anti")
-
+        new_docs = self._new_rows(
+            index, docs, id_col, F.col(text_col).alias("text")
+        )
         # ONE shingle build for the batch; signatures derive from it
         batch_sh = _track(
             shingle_sets(new_docs, self.shingle_k, "doc_id", "text")
@@ -219,61 +288,21 @@ class MinHashIndex:
         batch_sigs = _track(
             minhash_signatures_from_shingles(batch_sh, "doc_id", self.num_hashes)
         )
-
-        banded_new = _banded(
-            batch_sigs, "doc_id", self.num_hashes, self.rows_per_band
-        ).alias("a")
-        banded_old = _banded(
-            index.select("doc_id", "minhash"),
-            "doc_id",
-            self.num_hashes,
-            self.rows_per_band,
-        )
-        # batch side vs (index ∪ batch) side. New-new pairs keep a.id < b.id
-        # (each counted once); new-old pairs always orient (a=new, b=old) —
-        # the later-ingested member owns the pair, so no pair repeats across
-        # batches.
-        banded_all = (
-            banded_old.withColumn("__new", F.lit(False))
-            .unionByName(
-                _banded(
-                    batch_sigs, "doc_id", self.num_hashes, self.rows_per_band
-                ).withColumn("__new", F.lit(True))
-            )
-            .alias("b")
-        )
-        cand = (
-            banded_new.join(
-                banded_all,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (
-                    (~F.col("b.__new") & (F.col("a.doc_id") != F.col("b.doc_id")))
-                    | (F.col("b.__new") & (F.col("a.doc_id") < F.col("b.doc_id")))
-                ),
-            )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        cand = _later_member_pairs(
+            self._bands(batch_sigs),
+            _flag_new(
+                self._bands(index.select("doc_id", "minhash")),
+                self._bands(batch_sigs),
+            ),
+            ["band", "bh"],
+        ).dropDuplicates(["id_a", "id_b"])
         # verify against stored + batch shingle sets (sh fetched only for
         # candidate ids via the join)
         combined_sh = index.select("doc_id", "sh").unionByName(batch_sh)
-        pairs = _track(
-            _exact_jaccard_over(
-                cand, combined_sh, "doc_id", jaccard_threshold
-            )
+        return self._commit(
+            _exact_jaccard_over(cand, combined_sh, "doc_id", jaccard_threshold),
+            batch_sh.join(batch_sigs, "doc_id").select("doc_id", "minhash", "sh"),
         )
-        pairs.count()  # materialize BEFORE the index mutates
-
-        self.table.append(
-            batch_sh.join(
-                batch_sigs, "doc_id"
-            ).select("doc_id", "minhash", "sh")
-        )
-        return pairs
 
 
 SIMHASH_INDEX_SCHEMA = T.StructType(
@@ -285,30 +314,7 @@ SIMHASH_INDEX_SCHEMA = T.StructType(
 )
 
 
-def _simhash_blocks(sig: DataFrame) -> DataFrame:
-    """Explode a (doc_id, sig_hi, sig_lo) frame into the 4×16-bit pigeonhole
-    blocks (Manku et al.) — identical blocking to the batch operator
-    ``textops.simhash_near_dups``, so recall stays GUARANTEED for
-    hamming ≤ 3."""
-    mask = F.lit(0xFFFF)
-    return sig.select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), F.shiftright("sig_hi", 16).alias("v")),
-                F.struct(F.lit(1).alias("blk"),
-                         F.col("sig_hi").bitwiseAND(mask).alias("v")),
-                F.struct(F.lit(2).alias("blk"), F.shiftright("sig_lo", 16).alias("v")),
-                F.struct(F.lit(3).alias("blk"),
-                         F.col("sig_lo").bitwiseAND(mask).alias("v")),
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig_hi", "sig_lo", "bb.blk", "bb.v")
-
-
-class SimHashIndex:
+class SimHashIndex(_SignatureIndex):
     """Persisted 64-bit SimHash store keyed by doc_id — the incremental
     counterpart of ``textops.simhash_near_dups``, with the same only-new-rows
     / pair-owned-by-later-batch contract as ``MinHashIndex``. Because the
@@ -317,25 +323,13 @@ class SimHashIndex:
     equals the batch operator's full-corpus answer exactly — no
     probabilistic caveat."""
 
-    def __init__(self, spark: SparkSession, table: LakeTable):
-        self.spark = spark
-        self.table = table
+    SCHEMA = SIMHASH_INDEX_SCHEMA
 
     @classmethod
     def create(
         cls, spark: SparkSession, path: str, num_buckets: int = 16
     ) -> "SimHashIndex":
-        return cls(
-            spark,
-            LakeTable.create(
-                spark, path, SIMHASH_INDEX_SCHEMA,
-                num_buckets=num_buckets, bucket_key="doc_id",
-            ),
-        )
-
-    @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "SimHashIndex":
-        return cls(spark, LakeTable.load(spark, path))
+        return cls._create(spark, path, num_buckets)
 
     def add_batch(
         self,
@@ -353,46 +347,24 @@ class SimHashIndex:
                 "4-block pigeonhole guarantees recall only for max_hamming <= 3"
             )
         index = self.table.scan()
-        new_docs = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        ).join(index.select("doc_id"), "doc_id", "left_anti")
-        batch_sig = _track(simhash_signatures(new_docs, "doc_id", "text"))
-
-        blocked_new = _simhash_blocks(batch_sig).alias("a")
-        blocked_all = (
-            _simhash_blocks(index).withColumn("__new", F.lit(False))
-            .unionByName(
-                _simhash_blocks(batch_sig).withColumn("__new", F.lit(True))
-            )
-            .alias("b")
+        new_docs = self._new_rows(
+            index, docs, id_col, F.col(text_col).alias("text")
         )
-        ham = F.bit_count(
-            F.col("a.sig_hi").bitwiseXOR(F.col("b.sig_hi"))
-        ) + F.bit_count(F.col("a.sig_lo").bitwiseXOR(F.col("b.sig_lo")))
-        pairs = _track(
-            blocked_new.join(
-                blocked_all,
-                (F.col("a.blk") == F.col("b.blk"))
-                & (F.col("a.v") == F.col("b.v"))
-                & (
-                    (~F.col("b.__new")
-                     & (F.col("a.doc_id") != F.col("b.doc_id")))
-                    | (F.col("b.__new")
-                       & (F.col("a.doc_id") < F.col("b.doc_id")))
+        batch_sig = _track(simhash_signatures(new_docs, "doc_id", "text"))
+        pairs = (
+            _later_member_pairs(
+                _simhash_blocks(batch_sig, "doc_id"),
+                _flag_new(
+                    _simhash_blocks(index, "doc_id"),
+                    _simhash_blocks(batch_sig, "doc_id"),
                 ),
-            )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-                ham.alias("hamming"),
+                ["blk", "v"],
+                _hamming().alias("hamming"),
             )
             .filter(F.col("hamming") <= max_hamming)
             .dropDuplicates(["id_a", "id_b"])
         )
-        pairs.count()  # materialize BEFORE the index mutates
-        self.table.append(batch_sig.select("doc_id", "sig_hi", "sig_lo"))
-        return pairs
+        return self._commit(pairs, batch_sig.select("doc_id", "sig_hi", "sig_lo"))
 
 
 EMB_INDEX_SCHEMA = T.StructType(
@@ -405,7 +377,7 @@ EMB_INDEX_SCHEMA = T.StructType(
 )
 
 
-class EmbeddingIndex:
+class EmbeddingIndex(_SignatureIndex):
     """Persisted hyperplane-LSH store for embedding-cosine near-dup — the
     incremental counterpart of ``similarity.embedding_near_dup_pairs``.
 
@@ -423,13 +395,9 @@ class EmbeddingIndex:
     (stored in table properties) — all batches must bucket identically.
     """
 
-    def __init__(self, spark: SparkSession, table: LakeTable):
-        self.spark = spark
-        self.table = table
-        cfg = json.loads(table.snapshot()["properties"]["emb_index"])
-        self.bands = int(cfg["bands"])
-        self.rows_per_band = int(cfg["rows_per_band"])
-        self.probes = int(cfg["probes"])
+    SCHEMA = EMB_INDEX_SCHEMA
+    ID = BUCKET_KEY = "vec_id"
+    CONFIG_KEY = "emb_index"
 
     @classmethod
     def create(
@@ -441,21 +409,10 @@ class EmbeddingIndex:
         probes: int = 2,
         num_buckets: int = 16,
     ) -> "EmbeddingIndex":
-        table = LakeTable.create(
-            spark, path, EMB_INDEX_SCHEMA,
-            num_buckets=num_buckets, bucket_key="vec_id",
-            properties={
-                "emb_index": json.dumps(
-                    {"bands": int(bands), "rows_per_band": int(rows_per_band),
-                     "probes": int(probes)}
-                )
-            },
+        return cls._create(
+            spark, path, num_buckets, bands=bands,
+            rows_per_band=rows_per_band, probes=probes,
         )
-        return cls(spark, table)
-
-    @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "EmbeddingIndex":
-        return cls(spark, LakeTable.load(spark, path))
 
     # -------------------------------------------------------------- helpers
     def _rows_from_arrays(self, df: DataFrame, probe: bool) -> DataFrame:
@@ -502,13 +459,6 @@ class EmbeddingIndex:
         fails the batch loudly instead of silently dropping positions ≥ dim
         from its signature; the check rides the existing projection, so it
         costs no job. Default keeps the safe probe."""
-        from battetl_spark.analytics.similarity import (
-            _bucket_frame,
-            _exploded_bucket_rows,
-            _plane_signature,
-            cosine,
-        )
-
         index = self.table.scan()
         vec = F.col(vec_col).cast("array<double>")
         if dim is not None:
@@ -516,12 +466,7 @@ class EmbeddingIndex:
                 F.size(vec) > dim,
                 F.raise_error(F.lit(f"vector longer than the dim hint {dim}")),
             ).otherwise(vec)
-        new_v = _track(
-            vectors.select(
-                F.col(id_col).cast("long").alias("vec_id"),
-                vec.alias("__v"),
-            ).join(index.select("vec_id"), "vec_id", "left_anti")
-        )
+        new_v = _track(self._new_rows(index, vectors, id_col, vec.alias("__v")))
         sig = _plane_signature(
             new_v, "vec_id", self.bands * self.rows_per_band, dim=dim
         )
@@ -542,56 +487,19 @@ class EmbeddingIndex:
         )
         idx_probed = self._rows_from_arrays(idx_cols, probe=True)
 
-        def pairs_of(a, b):
-            return (
-                a.alias("a")
-                .join(
-                    b.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bkt") == F.col("b.bkt"))
-                    & (F.col("a.vec_id") < F.col("b.vec_id")),
-                )
-                .select(
-                    F.col("a.vec_id").alias("id_a"),
-                    F.col("b.vec_id").alias("id_b"),
-                )
-            )
-
         # smaller id probes: new-probes-vs-all covers pairs whose smaller
         # member is new; index-probes-vs-batch covers pairs where an OLD
         # smaller id probes toward a new vector's exact bucket
         cand = (
-            pairs_of(batch_probed, all_exact)
-            .unionByName(pairs_of(idx_probed, batch_exact))
+            _smaller_id_pairs(batch_probed, all_exact, ["band", "bkt"], "vec_id")
+            .unionByName(
+                _smaller_id_pairs(idx_probed, batch_exact, ["band", "bkt"], "vec_id")
+            )
             .dropDuplicates(["id_a", "id_b"])
         )
-        from battetl_spark.analytics.similarity import _dot, _norm
-
-        # per-vector norms staged below the verify joins (1 fold per
-        # candidate pair instead of 3; identical arithmetic — see the
-        # batch operator)
         combined_v = index.select(
             "vec_id", F.col("embedding").alias("__v")
         ).unionByName(new_v).withColumn("__nv", _norm(F.col("__v")))
-        joined = cand.join(
-            combined_v.select(F.col("vec_id").alias("id_a"),
-                              F.col("__v").alias("va"),
-                              F.col("__nv").alias("__na")), "id_a"
-        ).join(
-            combined_v.select(F.col("vec_id").alias("id_b"),
-                              F.col("__v").alias("vb"),
-                              F.col("__nv").alias("__nb")), "id_b"
-        )
-        pairs = _track(
-            joined.withColumn(
-                "__c",
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("__na") * F.col("__nb")),
-            )
-            .filter(F.col("__c") >= threshold)
-            .select("id_a", "id_b", F.round("__c", 6).alias("cos_sim"))
-        )
-        pairs.count()  # materialize BEFORE the index mutates
 
         to_store = buckets.selectExpr(
             "vec_id",
@@ -605,8 +513,9 @@ class EmbeddingIndex:
         ).join(new_v, "vec_id").select(
             "vec_id", F.col("__v").alias("embedding"), "bkt", "flips"
         )
-        self.table.append(to_store)
-        return pairs
+        return self._commit(
+            _cosine_verify(cand, combined_v, "vec_id", threshold), to_store
+        )
 
 
 NGRAM_INDEX_SCHEMA = T.StructType(
@@ -617,7 +526,7 @@ NGRAM_INDEX_SCHEMA = T.StructType(
 )
 
 
-class NgramIndex:
+class NgramIndex(_SignatureIndex):
     """Persisted shingle-set store for incremental exact n-gram Jaccard —
     the prefix-filtering (AllPairs/PPJoin) member of the incremental dedup
     family, and the one with the strongest contract: prefix filtering has
@@ -635,46 +544,15 @@ class NgramIndex:
     both-side condition), and every candidate is exact-verified.
     """
 
-    def __init__(self, spark: SparkSession, table: LakeTable):
-        self.spark = spark
-        self.table = table
-        cfg = json.loads(table.snapshot()["properties"]["ngram_index"])
-        self.shingle_k = int(cfg["shingle_k"])
+    SCHEMA = NGRAM_INDEX_SCHEMA
+    CONFIG_KEY = "ngram_index"
 
     @classmethod
     def create(
         cls, spark: SparkSession, path: str, shingle_k: int = 3,
         num_buckets: int = 16,
     ) -> "NgramIndex":
-        return cls(
-            spark,
-            LakeTable.create(
-                spark, path, NGRAM_INDEX_SCHEMA,
-                num_buckets=num_buckets, bucket_key="doc_id",
-                properties={
-                    "ngram_index": json.dumps({"shingle_k": int(shingle_k)})
-                },
-            ),
-        )
-
-    @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "NgramIndex":
-        return cls(spark, LakeTable.load(spark, path))
-
-    @staticmethod
-    def _prefix_rows(with_sh: DataFrame, threshold: float) -> DataFrame:
-        """(doc_id, tok) rows of each doc's (1-t)-prefix under the global
-        hash order (sh is stored sorted): a pair with J >= t must share a
-        token within BOTH prefixes (AllPairs), so the prefix join has
-        guaranteed recall."""
-        plen = (
-            F.size("sh")
-            - F.ceil(F.lit(float(threshold)) * F.size("sh")).cast("int")
-            + 1
-        )
-        return with_sh.select(
-            "doc_id", F.explode(F.slice("sh", 1, plen)).alias("tok")
-        )
+        return cls._create(spark, path, num_buckets, shingle_k=shingle_k)
 
     def add_batch(
         self,
@@ -688,48 +566,26 @@ class NgramIndex:
         batch itself (same only-new-rows / pair-owned-by-later-batch /
         materialize-before-append contract as MinHashIndex)."""
         index = self.table.scan()
-        new_docs = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        ).join(index.select("doc_id"), "doc_id", "left_anti")
+        new_docs = self._new_rows(
+            index, docs, id_col, F.col(text_col).alias("text")
+        )
         batch_sh = _track(
             shingle_sets(new_docs, self.shingle_k, "doc_id", "text")
             .select("doc_id", F.array_sort("sh").alias("sh"))
         )
-        pfx_new = self._prefix_rows(batch_sh, threshold).alias("a")
-        pfx_all = (
-            self._prefix_rows(index, threshold)
-            .withColumn("__new", F.lit(False))
-            .unionByName(
-                self._prefix_rows(batch_sh, threshold)
-                .withColumn("__new", F.lit(True))
-            )
-            .alias("b")
-        )
-        cand = (
-            pfx_new.join(
-                pfx_all,
-                (F.col("a.tok") == F.col("b.tok"))
-                & (
-                    (~F.col("b.__new")
-                     & (F.col("a.doc_id") != F.col("b.doc_id")))
-                    | (F.col("b.__new")
-                       & (F.col("a.doc_id") < F.col("b.doc_id")))
-                ),
-            )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        cand = _later_member_pairs(
+            _prefix_rows(batch_sh, "doc_id", threshold),
+            _flag_new(
+                _prefix_rows(index, "doc_id", threshold),
+                _prefix_rows(batch_sh, "doc_id", threshold),
+            ),
+            ["tok"],
+        ).dropDuplicates(["id_a", "id_b"])
         combined_sh = index.select("doc_id", "sh").unionByName(batch_sh)
-        pairs = _track(
-            _exact_jaccard_over(cand, combined_sh, "doc_id", threshold)
+        return self._commit(
+            _exact_jaccard_over(cand, combined_sh, "doc_id", threshold),
+            batch_sh.select("doc_id", "sh"),
         )
-        pairs.count()  # materialize BEFORE the index mutates
-        self.table.append(batch_sh.select("doc_id", "sh"))
-        return pairs
 
 
 SPAN_INDEX_SCHEMA = T.StructType(
@@ -741,7 +597,7 @@ SPAN_INDEX_SCHEMA = T.StructType(
 )
 
 
-class SpanIndex:
+class SpanIndex(_SignatureIndex):
     """Persisted occurrence store for incremental exact-substring (k-token
     span) dedup — the span-granular member of the incremental dedup family
     (see ``analytics.spans`` for the batch operator and its semantics).
@@ -776,29 +632,16 @@ class SpanIndex:
     longs per partition, never a skewed reduce.
     """
 
-    def __init__(self, spark: SparkSession, table: LakeTable):
-        self.spark = spark
-        self.table = table
-        cfg = json.loads(table.snapshot()["properties"]["span_index"])
-        self.span_k = int(cfg["span_k"])
+    SCHEMA = SPAN_INDEX_SCHEMA
+    BUCKET_KEY = "span_h"
+    CONFIG_KEY = "span_index"
 
     @classmethod
     def create(
         cls, spark: SparkSession, path: str, span_k: int = 8,
         num_buckets: int = 16,
     ) -> "SpanIndex":
-        return cls(
-            spark,
-            LakeTable.create(
-                spark, path, SPAN_INDEX_SCHEMA,
-                num_buckets=num_buckets, bucket_key="span_h",
-                properties={"span_index": json.dumps({"span_k": int(span_k)})},
-            ),
-        )
-
-    @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "SpanIndex":
-        return cls(spark, LakeTable.load(spark, path))
+        return cls._create(spark, path, num_buckets, span_k=span_k)
 
     def add_batch(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -810,10 +653,9 @@ class SpanIndex:
         from battetl_spark.analytics.spans import span_occurrences
 
         idx = self.table.scan()
-        new_docs = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        ).join(idx.select("doc_id"), "doc_id", "left_anti")
+        new_docs = self._new_rows(
+            idx, docs, id_col, F.col(text_col).alias("text")
+        )
         b = _track(
             span_occurrences(new_docs, self.span_k)
             .select("span_h", "doc_id", F.col("pos").cast("int").alias("pos"))
@@ -843,9 +685,6 @@ class SpanIndex:
             "span_h"
         )
         emit_old = idx_hit.join(turned, "span_h", "leftsemi")
-        out = _track(
-            emit_new.unionByName(emit_old).select("doc_id", "pos")
+        return self._commit(
+            emit_new.unionByName(emit_old).select("doc_id", "pos"), b
         )
-        out.count()  # materialize BEFORE the index mutates
-        self.table.append(b)
-        return out

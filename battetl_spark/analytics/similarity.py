@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from battetl_spark.analytics.cache import track as _track
+from battetl_spark.analytics.textops import _smaller_id_pairs
 
 
 def _dot(a, b):
@@ -343,6 +344,28 @@ def _exploded_bucket_rows(
     ).select(id_col, "bb.band", "bb.bkt")
 
 
+def _cosine_verify(
+    cand: DataFrame, v: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact-cosine verify of candidate pairs against ``v`` = (id, ``__v``
+    vector, ``__nv`` norm): filter on the raw cosine, emit it rounded.
+    Norms are staged BELOW the joins, so each candidate pair folds only its
+    dot product — the candidate set is ~1% of all pairs (millions at sf1)."""
+    joined = cand.join(
+        v.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va"),
+                 F.col("__nv").alias("__na")), "id_a"
+    ).join(
+        v.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb"),
+                 F.col("__nv").alias("__nb")), "id_b"
+    )
+    raw = _dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))
+    return (
+        joined.withColumn("__c", raw)
+        .filter(F.col("__c") >= threshold)
+        .select("id_a", "id_b", F.round("__c", 6).alias("cos_sim"))
+    )
+
+
 def embedding_near_dup_pairs(
     vectors: DataFrame,
     threshold: float = 0.9,
@@ -407,36 +430,13 @@ def embedding_near_dup_pairs(
 
     # probing ONE side suffices: bucket XOR is symmetric, and either
     # orientation of (id_a < id_b) puts the probing side on every pair
-    a = _exploded_bucket_rows(buckets, id_col, bands, probes, probe=True).alias("a")
-    b_ = _exploded_bucket_rows(buckets, id_col, bands, probes, probe=False).alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # verify with per-vector norms staged BELOW the joins: the candidate
-    # set is ~1% of all pairs (millions at sf1) and the old shape folded
-    # both norms per pair — 3 folds/pair → 1 (identical arithmetic)
-    joined = cand.join(
-        v.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va"),
-                 F.col("__nv").alias("__na")), "id_a"
-    ).join(
-        v.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb"),
-                 F.col("__nv").alias("__nb")), "id_b"
-    )
-    raw = _dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))
-    return (
-        joined.withColumn("__c", raw)
-        .filter(F.col("__c") >= threshold)
-        .select("id_a", "id_b", F.round("__c", 6).alias("cos_sim"))
-    )
+    cand = _smaller_id_pairs(
+        _exploded_bucket_rows(buckets, id_col, bands, probes, probe=True),
+        _exploded_bucket_rows(buckets, id_col, bands, probes, probe=False),
+        ["band", "bkt"],
+        id_col,
+    ).dropDuplicates(["id_a", "id_b"])
+    return _cosine_verify(cand, v, id_col, threshold)
 
 
 def _nearest_cell_expr(vec_col, centroids: list[list[float]]):

@@ -46,6 +46,9 @@ extension required by the build brief.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -267,21 +270,19 @@ def shingle_hash_seq_from(wh_col, k: int):
     )
 
 
-def _word_shingle_hash_seq(col, k: int):
-    """Inline (single-expression) shingle hash sequence — only for call
-    sites that cannot stage the word-hash array as a column; corpus-scale
-    consumers use ``word_hash_array`` + ``shingle_hash_seq_from``."""
-    return shingle_hash_seq_from(word_hash_array(col), k)
-
-
 def shingle_sets(
     docs: DataFrame, k: int, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """``(id, sh: array<long>)`` distinct-shingle frame with the word-hash
     array staged as a column (two-Project shape; CollapseProject keeps the
-    stage because the array is referenced k+1 times by non-cheap slices).
-    Equivalent to ``docs.select(id, word_shingle_hashes(text, k))`` row for
-    row — same expressions, evaluated once instead of k+1 times."""
+    stage because the array is referenced k+1 times by non-cheap slices),
+    so the word-hash chain is evaluated once instead of k+1 times.
+
+    Shingle hashes need no string concatenation: each is xxhash64 over k
+    word hashes, so two shingles collide iff their word tuples match
+    (modulo 64-bit collisions), and set operations on the hash arrays are
+    isomorphic to set operations on shingle strings — which is what makes
+    exact-Jaccard verification oracle-expressible."""
     staged = docs.select(
         F.col(id_col), word_hash_array(text_col).alias("__wh")
     )
@@ -314,21 +315,6 @@ def exploded_shingles(
             F.array_distinct(shingle_hash_seq_from("__wh", k))
         ).alias(out_col),
     )
-
-
-def word_shingle_hashes(col, k: int):
-    """Distinct k-word shingles of normalized text, as 64-bit hashes.
-
-    Built without any string concatenation in the per-shingle path: a word
-    hash array is materialized once, then each shingle hash is xxhash64 over
-    k cheap array gets — O(len·k) per doc. Two shingles hash-collide iff
-    their word tuples match (modulo 64-bit collisions), so set operations on
-    the hash arrays are isomorphic to set operations on shingle strings —
-    which is what makes exact-Jaccard verification oracle-expressible.
-    Column-shaped (inline) variant — prefer ``shingle_sets`` for corpus
-    passes (see ``word_hash_array`` for why).
-    """
-    return F.array_distinct(_word_shingle_hash_seq(col, k))
 
 
 # ----------------------------------------------------------- minhash + LSH
@@ -407,30 +393,19 @@ def _banded(
     ).select(id_col, "bb.band", "bb.bh")
 
 
-def _candidate_mass(banded: DataFrame) -> int:
-    """Exact self-join output size for a banded frame: sum over (band, bh)
-    groups of C(n, 2) — ONE map-side-combinable aggregate over the exploded
-    signatures, orders of magnitude cheaper than the join it predicts."""
-    row = banded.groupBy("band", "bh").agg(
-        F.count("*").alias("n")
-    ).agg(
-        F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m")
-    ).collect()[0]
-    return int(row["m"] or 0)
-
-
 def _candidate_masses(
     sigs: DataFrame, id_col: str, num_hashes: int, rs: list[int]
 ) -> tuple[dict[int, int], dict[int, int]]:
-    """``_candidate_mass`` for SEVERAL r values in ONE job (round-6: each
-    driver-synchronous probe job costs ~0.5 s at sf1, as much as the
-    candidate join it sizes — probing r and r+1 together halves the
-    escalation path's job count). Also returns each r's TOTAL banded row
-    count (= n_docs × bands(r), exactly — every signature row explodes into
-    precisely ``bands`` entries), so the caller derives the corpus size
-    without a separate count job. Same aggregate expression per r as
-    ``_candidate_mass`` — the masses, and every decision taken on them,
-    are identical.
+    """Candidate mass — the exact self-join output size of the banded
+    frame, sum over (band, bh) groups of C(n, 2) — for SEVERAL r values in
+    ONE job (round-6: each driver-synchronous probe job costs ~0.5 s at
+    sf1, as much as the candidate join it sizes — probing r and r+1
+    together halves the escalation path's job count). Also returns each
+    r's TOTAL banded row count (= n_docs × bands(r), exactly — every
+    signature row explodes into precisely ``bands`` entries), so the caller
+    derives the corpus size without a separate count job. One
+    map-side-combinable aggregate, orders of magnitude cheaper than the
+    join it predicts.
 
     All r values explode from ONE scan of ``sigs`` (a single Generate of
     tagged (r, band, bh) structs): a union of per-r banded frames would
@@ -516,6 +491,25 @@ def _auto_rows_per_band(
         r = rs[-1] + 1
 
 
+def _smaller_id_pairs(
+    a: DataFrame, b: DataFrame, on: list[str], id_col: str, *extra
+) -> DataFrame:
+    """Candidate ``(id_a, id_b, *extra)`` pairs of ``a`` and ``b`` rows that
+    share every ``on`` key, oriented from the smaller id (a.id < b.id);
+    ``extra`` may reference the ``a.``/``b.`` sides. Not deduplicated: a
+    pair can share several keys."""
+    cond = functools.reduce(
+        operator.and_,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in on]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    return a.alias("a").join(b.alias("b"), cond).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *extra,
+    )
+
+
 def _banded_candidates(
     sigs: DataFrame,
     id_col: str,
@@ -536,17 +530,9 @@ def _banded_candidates(
         _, banded = _auto_rows_per_band(sigs, id_col, num_hashes)
     else:
         banded = _banded(sigs, id_col, num_hashes, int(rows_per_band))
-    a, b = banded.alias("a"), banded.alias("b")
-    matches = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-    )
     return (
-        matches.groupBy("id_a", "id_b")
+        _smaller_id_pairs(banded, banded, ["band", "bh"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("__n_shared"))
         .filter(F.col("__n_shared") >= min_band_matches)
         .select("id_a", "id_b")
@@ -630,6 +616,18 @@ def _exact_jaccard_over(
     )
 
 
+def _prefix_rows(with_sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """(id, tok) rows of each doc's (1-t)-prefix of its ordered shingle
+    array ``sh``: a pair with J >= t must share a token within BOTH
+    prefixes (AllPairs), so a prefix join has guaranteed recall."""
+    plen = (
+        F.size("sh") - F.ceil(F.lit(float(threshold)) * F.size("sh")).cast("int") + 1
+    )
+    return with_sh.select(
+        F.col(id_col), F.explode(F.slice("sh", 1, plen)).alias("tok")
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -677,23 +675,9 @@ def ngram_jaccard_pairs(
     # verify sides); for the frequency ordering it is itself a multi-shuffle
     # pipeline — persist so the corpus is shingled/ordered exactly once
     with_sh = _track(with_sh)
-    prefix_len = (
-        F.size("sh") - F.ceil(F.lit(float(threshold)) * F.size("sh")).cast("int") + 1
-    )
-    prefix = with_sh.select(
-        F.col(id_col), F.explode(F.slice("sh", 1, prefix_len)).alias("tok")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    prefix = _prefix_rows(with_sh, id_col, threshold)
+    cand = _smaller_id_pairs(prefix, prefix, ["tok"], id_col).dropDuplicates(
+        ["id_a", "id_b"]
     )
     return _exact_jaccard_over(cand, with_sh, id_col, threshold)
 
@@ -920,6 +904,33 @@ def simhash(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
     )
 
 
+def _simhash_blocks(sig: DataFrame, id_col: str) -> DataFrame:
+    """Explode an (id, sig_hi, sig_lo) frame into its 4×16-bit pigeonhole
+    blocks (blk, v): any pair within hamming 3 shares at least one."""
+    mask = F.lit(0xFFFF)
+    return sig.select(
+        F.col(id_col),
+        "sig_hi",
+        "sig_lo",
+        F.explode(
+            F.array(
+                F.struct(F.lit(0).alias("blk"), F.shiftright("sig_hi", 16).alias("v")),
+                F.struct(F.lit(1).alias("blk"), F.col("sig_hi").bitwiseAND(mask).alias("v")),
+                F.struct(F.lit(2).alias("blk"), F.shiftright("sig_lo", 16).alias("v")),
+                F.struct(F.lit(3).alias("blk"), F.col("sig_lo").bitwiseAND(mask).alias("v")),
+            )
+        ).alias("bb"),
+    ).select(id_col, "sig_hi", "sig_lo", "bb.blk", "bb.v")
+
+
+def _hamming():
+    """Exact hamming distance between the ``a.`` and ``b.`` signatures of a
+    blocked join."""
+    return F.bit_count(
+        F.col("a.sig_hi").bitwiseXOR(F.col("b.sig_hi"))
+    ) + F.bit_count(F.col("a.sig_lo").bitwiseXOR(F.col("b.sig_lo")))
+
+
 def simhash_near_dups(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -943,35 +954,10 @@ def simhash_near_dups(
     # re-runs the whole corpus-wide tokenize+md5+64-vote pipeline (2× the
     # dominant cost, measured). N×(id, 2 longs) — spills if ever large.
     sig = _track(simhash_signatures(docs, id_col, text_col))
-    mask = F.lit(0xFFFF)
-    blocked = sig.select(
-        F.col(id_col),
-        "sig_hi",
-        "sig_lo",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), F.shiftright("sig_hi", 16).alias("v")),
-                F.struct(F.lit(1).alias("blk"), F.col("sig_hi").bitwiseAND(mask).alias("v")),
-                F.struct(F.lit(2).alias("blk"), F.shiftright("sig_lo", 16).alias("v")),
-                F.struct(F.lit(3).alias("blk"), F.col("sig_lo").bitwiseAND(mask).alias("v")),
-            )
-        ).alias("bb"),
-    ).select(id_col, "sig_hi", "sig_lo", "bb.blk", "bb.v")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    ham = F.bit_count(
-        F.col("a.sig_hi").bitwiseXOR(F.col("b.sig_hi"))
-    ) + F.bit_count(F.col("a.sig_lo").bitwiseXOR(F.col("b.sig_lo")))
+    blocked = _simhash_blocks(sig, id_col)
     return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
+        _smaller_id_pairs(
+            blocked, blocked, ["blk", "v"], id_col, _hamming().alias("hamming")
         )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])

@@ -416,6 +416,17 @@ def _low_entropy_corpus(spark, n_docs=1200, vocab=40, words=25, planted=5):
     )
 
 
+def _candidate_mass(banded):
+    """Reference: exact self-join output size of a banded frame, sum over
+    (band, bh) groups of C(n, 2), one probe per r."""
+    row = banded.groupBy("band", "bh").agg(
+        F.count("*").alias("n")
+    ).agg(
+        F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("m")
+    ).collect()[0]
+    return int(row["m"] or 0)
+
+
 def test_minhash_auto_banding_bounds_candidates(spark):
     """rows_per_band='auto' must escalate r under candidate pressure and
     keep the banded self-join within the budget, while still finding the
@@ -426,13 +437,13 @@ def test_minhash_auto_banding_bounds_candidates(spark):
 
     with cache_scope():
         sigs = TX.minhash_signatures(docs).cache()
-        mass_r2 = TX._candidate_mass(TX._banded(sigs, "doc_id", 32, 2))
+        mass_r2 = _candidate_mass(TX._banded(sigs, "doc_id", 32, 2))
         budget = mass_r2 // 4  # force pressure regardless of corpus size
         r, banded = TX._auto_rows_per_band(
             sigs, "doc_id", 32, candidate_budget=budget
         )
         assert r > 2  # escalated
-        assert TX._candidate_mass(banded) <= budget
+        assert _candidate_mass(banded) <= budget
         # stops when fewer than 2 bands would remain, even under pressure
         r_cap, _ = TX._auto_rows_per_band(
             sigs, "doc_id", 32, candidate_budget=0
@@ -531,6 +542,37 @@ def test_incremental_reingest_noop_and_reopen(spark, docs, tmp_path):
     pairs = reopened.add_batch(b1, jaccard_threshold=0.8)
     assert pairs.count() > 0  # cross-batch pairs found through the reopen
     assert reopened.table.scan().count() == docs.count()
+
+
+@pytest.mark.parametrize(
+    "cls, params, bucket_key, key, stored",
+    [
+        ("MinHashIndex", {"num_hashes": 16, "shingle_k": 4, "rows_per_band": 4},
+         "doc_id", "minhash_index",
+         '{"num_hashes": 16, "shingle_k": 4, "rows_per_band": 4}'),
+        ("EmbeddingIndex", {"bands": 6, "rows_per_band": 8, "probes": 1},
+         "vec_id", "emb_index", '{"bands": 6, "rows_per_band": 8, "probes": 1}'),
+        ("NgramIndex", {"shingle_k": 5}, "doc_id", "ngram_index",
+         '{"shingle_k": 5}'),
+        ("SpanIndex", {"span_k": 6}, "span_h", "span_index", '{"span_k": 6}'),
+    ],
+)
+def test_index_config_round_trips_through_open(
+    spark, tmp_path, cls, params, bucket_key, key, stored
+):
+    """Parameters frozen at create() come back from open(), and the stored
+    table property keeps its key and JSON text, so indexes already on disk
+    keep opening (metadata only — no Spark job)."""
+    from battetl_spark.analytics import sig_index
+
+    index_cls = getattr(sig_index, cls)
+    path = str(tmp_path / "idx")
+    index_cls.create(spark, path, num_buckets=4, **params)
+    reopened = index_cls.open(spark, path)
+    assert {name: getattr(reopened, name) for name in params} == params
+    snap = reopened.table.snapshot()
+    assert snap["properties"] == {key: stored}
+    assert (snap["bucket_key"], snap["num_buckets"]) == (bucket_key, 4)
 
 
 def test_incremental_band_join_prunes_signature_columns(spark, docs, tmp_path):
@@ -912,7 +954,7 @@ def test_candidate_masses_match_per_r_probes(spark):
         n_docs = sigs.count()
         masses, totals = TX._candidate_masses(sigs, "doc_id", 32, [2, 3])
         for r in (2, 3):
-            assert masses[r] == TX._candidate_mass(
+            assert masses[r] == _candidate_mass(
                 TX._banded(sigs, "doc_id", 32, r)
             )
             assert totals[r] == n_docs * (32 // r)

@@ -8,10 +8,15 @@ numbers drift.
 
 Usage:
   python tools/bench_ab.py 'conf1=val1,conf2=val2' q1 q2 ...
-  REPS=3 SPARK_GRAFT_SF_DIR=/tmp/sf1 python tools/bench_ab.py ...
+  python tools/bench_ab.py '' q1 q2 ...           # A vs A: plain timing + noise floor
+  python tools/bench_ab.py --plans SPEC q1 ...    # also write A's plan to plans/r06/<q>_<tag>.txt
+  python tools/bench_ab.py --noop SPEC q1 ...     # noop-sink action instead of count()
+  REPS=3 SPARK_GRAFT_SF_DIR=/tmp/sf1 PLAN_TAG=after python tools/bench_ab.py ...
 
 A = session defaults; B = the given conf overrides (restored after each B
-rep). Prints per-rep samples and the median A/B per query.
+rep). Prints per-rep samples and the median A/B per query. ``--noop`` runs
+each query into the noop sink, which executes the whole plan without the
+final count's column pruning (noop-sink isolation).
 """
 
 from __future__ import annotations
@@ -26,10 +31,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    conf_spec = sys.argv[1]
-    names = sys.argv[2:]
-    overrides = dict(kv.split("=", 1) for kv in conf_spec.split(","))
+    args = sys.argv[1:]
+    flags = {a for a in args if a in ("--plans", "--noop")}
+    conf_spec, *names = [a for a in args if a not in flags]
+    overrides = dict(kv.split("=", 1) for kv in conf_spec.split(",") if kv)
     reps = int(os.environ.get("REPS", "3"))
+    tag = os.environ.get("PLAN_TAG", "before")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -58,13 +65,28 @@ def main():
             else:
                 spark.conf.set(k, v)
 
+    def run(name):
+        df = qs[name](spark, sf_dir)
+        if "--noop" in flags:
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            df.count()
+
     results = {}
     for name in names:
+        if "--plans" in flags:
+            # A's plan (session defaults), tagged by PLAN_TAG
+            os.makedirs("plans/r06", exist_ok=True)
+            df = qs[name](spark, sf_dir)
+            with open(f"plans/r06/{name}_{tag}.txt", "w") as f:
+                f.write(df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"))
+            spark.catalog.clearCache()
         a_samples, b_samples = [], []
         # warm both variants once (JIT) before timing
         for active in (False, True):
             set_conf(active)
-            qs[name](spark, sf_dir).count()
+            run(name)
             spark.catalog.clearCache()
         for _ in range(reps):
             for active, sink in ((False, a_samples), (True, b_samples)):
@@ -72,7 +94,7 @@ def main():
                 spark.sparkContext.setJobDescription(
                     f"ab:{name}:{'B' if active else 'A'}")
                 t0 = time.time()
-                qs[name](spark, sf_dir).count()
+                run(name)
                 sink.append(round(time.time() - t0, 3))
                 spark.catalog.clearCache()
         set_conf(False)
