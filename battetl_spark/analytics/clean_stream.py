@@ -89,6 +89,10 @@ from battetl_spark.analytics.sig_index import MinHashIndex
 from battetl_spark.analytics.textops import exact_dedup, quality_features
 from battetl_spark.cdc import merge_apply
 from battetl_spark.lake import LakeTable
+from battetl_spark.streaming.pipeline import (
+    _MicrobatchDriver,
+    read_change_event_stream,
+)
 
 DIGEST_SCHEMA = T.StructType(
     [
@@ -376,14 +380,12 @@ def read_document_stream(
 ) -> DataFrame:
     """Tail a directory of document parquet files as a stream (one file per
     microbatch by default — the arrival unit of a drop-folder ingest)."""
-    return (
-        spark.readStream.schema(schema or DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
+    return read_change_event_stream(
+        spark, path, max_files_per_trigger, schema=schema or DOC_STREAM_SCHEMA
     )
 
 
-class CleanerStream:
+class CleanerStream(_MicrobatchDriver):
     """Structured Streaming driver for ``IncrementalCorpusCleaner`` — the
     same foreachBatch shape as ``streaming.pipeline.CdcStream``, closing the
     loop: readStream over arriving documents → per-microbatch incremental
@@ -441,24 +443,3 @@ class CleanerStream:
             self.cleaner.out.compact_fences()
         if self.on_batch is not None:
             self.on_batch(epoch_id, r)
-
-    def start(
-        self,
-        docs: DataFrame,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ):
-        writer = docs.writeStream.foreachBatch(self._apply).option(
-            "checkpointLocation", self.checkpoint_dir
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
-
-    def run_to_completion(self, docs: DataFrame, timeout_s: int = 600) -> None:
-        q = self.start(docs, available_now=True)
-        q.awaitTermination(timeout_s)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))

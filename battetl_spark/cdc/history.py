@@ -285,33 +285,18 @@ class HistoryTable:
         some file MAY hold an expirable row (min(valid_to_lsn) <= L; files
         without stats rewrite conservatively) — cost ∝ qualifying-bucket
         bytes, never table bytes. Returns the new snapshot or None."""
-        table = self.table
-        snap = table.snapshot()
         L = int(before_lsn)
 
-        def may_qualify(entry: dict) -> bool:
-            stats = entry.get("stats") or {}
-            vt = stats.get(VALID_TO)
+        def may_hold(entry: dict) -> bool:
+            vt = (entry.get("stats") or {}).get(VALID_TO)
             # valid_to stats: NULL-only files harvest min=None → cannot
             # qualify (open rows never expire); missing stats → rewrite
-            if vt is None:
-                return True
-            return vt["min"] is not None and vt["min"] <= L
+            return vt is None or (vt["min"] is not None and vt["min"] <= L)
 
-        buckets = sorted(
-            int(b)
-            for b, entries in snap["files"].items()
-            if any(may_qualify(e) for e in entries)
+        # open rows (valid_to NULL) are never dropped
+        return self.table._drop_where(
+            may_hold, F.col(VALID_TO).isNotNull() & (F.col(VALID_TO) <= F.lit(L))
         )
-        if not buckets:
-            return None
-        rows = table.scan(buckets, snap)
-        kept = rows.filter(
-            F.col(VALID_TO).isNull() | (F.col(VALID_TO) > F.lit(L))
-        ).withColumn(
-            BUCKET_COL, bucket_expr(snap["bucket_key"], snap["num_buckets"])
-        )
-        return table.replace_buckets(kept, buckets, base_snapshot=snap)
 
     # ----------------------------------------------------------------- reads
     def history(self) -> DataFrame:

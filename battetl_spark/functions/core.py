@@ -51,12 +51,6 @@ def interval_to_seconds(col, ndigits: int = 3) -> Column:
     return F.round(total, ndigits)
 
 
-def looks_like_interval(col) -> Column:
-    """Row-level gate matching the reference's first-row sniff
-    (Transformer.py:256-259, 289-300)."""
-    return _strip_ws(col).rlike(_DHMS)
-
-
 def parse_datetime_multi(col, formats: list[str] | None = None) -> Column:
     """Try explicit formats before the generic parser — the reference's
     fast-path list incl. a leading-tab variant (utils.py:361-399).

@@ -223,6 +223,45 @@ def _bucket_differs(snap_a: dict, snap_b: dict, bucket) -> bool:
     return snap_a["files"].get(b) != snap_b["files"].get(b)
 
 
+def _fence_gate(snap: dict, fence: dict | None) -> bool:
+    """Exactly-once gate: False if ``fence``'s epoch is already applied (the
+    commit declines), else record it in the same snapshot as the data."""
+    if fence is not None:
+        if _is_fenced(snap, fence["epoch_id"]):
+            return False
+        snap["fences"][str(fence["epoch_id"])] = {
+            k: v for k, v in fence.items() if k != "epoch_id"
+        }
+    return True
+
+
+def _add_entries(snap: dict, new_files: dict[str, list[dict]], **tags) -> None:
+    """Append new file entries, tagged with ``tags``, to their buckets
+    (replacing the lists: hydrated lists are shared with the cache)."""
+    for b, entries in new_files.items():
+        snap["files"][b] = snap["files"].get(b, []) + [{**e, **tags} for e in entries]
+
+
+def _push_schema(snap: dict, struct: T.StructType) -> str:
+    """Record ``struct`` as a new schema id and make it current."""
+    sid = str(max(int(k) for k in snap["schemas"]) + 1)
+    snap["schemas"][sid] = json.loads(struct.json())
+    snap["schema"] = snap["schemas"][sid]
+    snap["current_schema_id"] = sid
+    return sid
+
+
+def _check_alterable(snap: dict, name: str, verb: str) -> None:
+    protected = {snap["bucket_key"], *(snap.get("key_cols") or []),
+                 *(snap.get("sort_cols") or []),
+                 *(snap.get("properties", {}).get("protected_cols") or [])}
+    if name.startswith("_") or name in protected:
+        raise ValueError(
+            f"column {name!r} is a key/bucket/sort/internal column "
+            f"and cannot be {verb}"
+        )
+
+
 def bucket_expr(bucket_key: str, num_buckets: int):
     """Deterministic bucket id for a key — xxhash64-based so any engine stage
     (dedup, merge, scan pruning) derives the same bucket without metadata."""
@@ -307,27 +346,21 @@ class LakeTable:
     # exactly this reason.
     def snapshot(self) -> dict:
         with open(os.path.join(self._meta_dir, _HINT)) as f:
-            v = int(f.read().strip())
-        with open(os.path.join(self._meta_dir, f"v{v:08d}.json")) as f:
+            return self._open(int(f.read().strip()))
+
+    def _open(self, version: int) -> dict:
+        with open(os.path.join(self._meta_dir, f"v{version:08d}.json")) as f:
             return self._hydrate(json.load(f))
 
-    @staticmethod
-    def _expand_manifest_index(snap: dict) -> dict:
-        """Roots store the pointer map INVERTED — {manifest-path: [bucket
-        ids]} — because most buckets share a few manifests, so the inverted
-        form is O(#manifests × path + num_buckets × int) instead of
-        O(num_buckets × path): 233 KB → ~20 KB per root at 4096 buckets
-        (measured). In memory the {bucket → path} form is what the reuse /
-        diff logic wants, so expand on load."""
-        inv = snap.pop("manifests_inv", None)
-        if inv is not None and "manifests" not in snap:
-            snap["manifests"] = {
-                str(b): p for p, bs in inv.items() for b in bs
-            }
-        return snap
+    def _roots(self):
+        """Retained snapshot roots as stored (not hydrated), oldest first."""
+        for p in sorted(glob.glob(os.path.join(self._meta_dir, "v*.json"))):
+            with open(p) as f:
+                yield json.load(f)
 
-    def _read_manifest(self, rel: str) -> dict:
-        m = self._manifest_cache.pop(rel, None)  # pop+reinsert = move to end
+    def _read_manifest(self, rel: str, written: dict | None = None) -> dict:
+        """Manifest via the bounded LRU (``written``: one just written)."""
+        m = self._manifest_cache.pop(rel, written)  # pop+reinsert = move to end
         if m is None:
             with open(os.path.join(self._meta_dir, rel)) as f:
                 m = json.load(f)
@@ -337,14 +370,19 @@ class LakeTable:
         return m
 
     def _hydrate(self, snap: dict) -> dict:
-        """Materialize ``snap["files"]`` from manifest pointers (no-op for
-        legacy snapshots that inlined the file lists)."""
-        self._expand_manifest_index(snap)
-        if "files" not in snap:
-            snap["files"] = {
-                b: self._read_manifest(rel)[b]
-                for b, rel in snap.get("manifests", {}).items()
-            }
+        """Materialize ``snap["files"]`` from the root's manifest pointers.
+        Roots store the pointer map INVERTED — {manifest-path: [bucket
+        ids]} — because most buckets share a few manifests, so the inverted
+        form is O(#manifests × path + num_buckets × int) instead of
+        O(num_buckets × path): 233 KB → ~20 KB per root at 4096 buckets
+        (measured). In memory the {bucket → path} form is what the reuse /
+        diff logic wants, so expand on load."""
+        snap["manifests"] = {
+            str(b): p for p, bs in snap.pop("manifests_inv").items() for b in bs
+        }
+        snap["files"] = {
+            b: self._read_manifest(rel)[b] for b, rel in snap["manifests"].items()
+        }
         return snap
 
     def _write_snapshot(self, snap: dict) -> None:
@@ -361,9 +399,7 @@ class LakeTable:
             rel = os.path.join("manifests", f"m-{uuid.uuid4().hex}.json")
             with open(os.path.join(self._meta_dir, rel), "w") as f:
                 json.dump(changed, f)
-            self._manifest_cache[rel] = changed
-            while len(self._manifest_cache) > self._manifest_cache_cap:
-                self._manifest_cache.pop(next(iter(self._manifest_cache)))
+            self._read_manifest(rel, changed)
             for b in changed:
                 ptrs[b] = rel
         snap["manifests"] = {b: p for b, p in ptrs.items() if b in files}
@@ -380,14 +416,15 @@ class LakeTable:
             f.write(str(snap["version"]))
         os.replace(tmp, os.path.join(self._meta_dir, _HINT))
 
-    def commit(self, mutate, max_retries: int = 10) -> dict:
-        """Optimistic commit: mutate(copy-of-current) -> new snapshot dict
-        (or None to abort). Retries on version collision."""
+    def commit(self, mutate, max_retries: int = 10) -> dict | None:
+        """Optimistic commit: mutate(copy-of-current, lineage emptied) -> new
+        snapshot dict, or None to decline (then returns None). Retries on
+        version collision."""
         for _ in range(max_retries):
             cur = self.snapshot()
-            new = mutate(copy.deepcopy(cur))
+            new = mutate(copy.deepcopy({**cur, "lineage": []}))
             if new is None:
-                return cur
+                return None
             new["version"] = cur["version"] + 1
             new["snapshot_id"] = new["version"]
             new["parent"] = cur["version"]
@@ -417,15 +454,15 @@ class LakeTable:
         Raises SchemaCompatibilityError on incompatible changes — the
         pipeline errors cleanly with no partial commit (FIXTURES.md F6).
         """
+        evolved = None
+
         def mutate(snap):
+            nonlocal evolved
             cur = T.StructType.fromJson(snap["schema"])
             evolved = check_schema_compatibility(cur, incoming)
             if evolved.json() == cur.json():
                 return None  # no-op
-            sid = str(max(int(k) for k in snap["schemas"]) + 1)
-            snap["schemas"][sid] = json.loads(evolved.json())
-            snap["schema"] = snap["schemas"][sid]
-            snap["current_schema_id"] = sid
+            sid = _push_schema(snap, evolved)
             # a column re-added after drop_column() is a NEW column: record
             # the first schema-id whose files may carry its values, so scan
             # masks the dropped predecessor's bytes in older files to NULL
@@ -438,10 +475,10 @@ class LakeTable:
                     snap["column_min_sid"] = mins
                     del dropped[f.name]
                     snap["dropped_cols"] = dropped
-            snap["lineage"] = []
             return snap
 
-        return T.StructType.fromJson(self.commit(mutate)["schema"])
+        self.commit(mutate)
+        return evolved
 
     def rename_column(self, old: str, new: str) -> T.StructType:
         """Rename a column by metadata only — no file rewrite (Iceberg
@@ -466,25 +503,11 @@ class LakeTable:
                 raise ValueError(f"column {new!r} already exists")
             if not new or new.startswith("_"):
                 raise ValueError(f"invalid target column name {new!r}")
-            protected = set(snap.get("key_cols") or [])
-            protected.add(snap["bucket_key"])
-            protected |= set(snap.get("sort_cols") or [])
-            protected |= set(
-                snap.get("properties", {}).get("protected_cols", []) or []
-            )
-            if old.startswith("_") or old in protected:
-                raise ValueError(
-                    f"column {old!r} is a key/bucket/sort/internal column "
-                    "and cannot be renamed"
-                )
-            evolved = T.StructType([
+            _check_alterable(snap, old, "renamed")
+            sid = _push_schema(snap, T.StructType([
                 T.StructField(new, f.dataType, f.nullable) if f.name == old else f
                 for f in cur.fields
-            ])
-            sid = str(max(int(k) for k in snap["schemas"]) + 1)
-            snap["schemas"][sid] = json.loads(evolved.json())
-            snap["schema"] = snap["schemas"][sid]
-            snap["current_schema_id"] = sid
+            ]))
             aliases = dict(snap.get("column_aliases") or {})
             chain = list(aliases.pop(old, []))
             chain.append([int(sid), old])
@@ -508,7 +531,6 @@ class LakeTable:
             if old in listed:
                 props["stats_cols"] = [new if c == old else c for c in listed]
                 snap["properties"] = props
-            snap["lineage"] = []
             return snap
 
         return T.StructType.fromJson(self.commit(mutate)["schema"])
@@ -531,26 +553,13 @@ class LakeTable:
             cur = T.StructType.fromJson(snap["schema"])
             if name not in {f.name for f in cur.fields}:
                 raise ValueError(f"column {name!r} does not exist")
-            protected = set(snap.get("key_cols") or [])
-            protected.add(snap["bucket_key"])
-            protected |= set(snap.get("sort_cols") or [])
-            protected |= set(
-                snap.get("properties", {}).get("protected_cols", []) or []
+            _check_alterable(snap, name, "dropped")
+            sid = _push_schema(
+                snap, T.StructType([f for f in cur.fields if f.name != name])
             )
-            if name.startswith("_") or name in protected:
-                raise ValueError(
-                    f"column {name!r} is a key/bucket/sort/internal column "
-                    "and cannot be dropped"
-                )
-            evolved = T.StructType([f for f in cur.fields if f.name != name])
-            sid = str(max(int(k) for k in snap["schemas"]) + 1)
-            snap["schemas"][sid] = json.loads(evolved.json())
-            snap["schema"] = snap["schemas"][sid]
-            snap["current_schema_id"] = sid
             dropped = dict(snap.get("dropped_cols") or {})
             dropped[name] = int(sid)
             snap["dropped_cols"] = dropped
-            snap["lineage"] = []
             return snap
 
         return T.StructType.fromJson(self.commit(mutate)["schema"])
@@ -716,9 +725,6 @@ class LakeTable:
             out = out.filter(_FILTER_OPS[op](F.col(col), lit))
         return out
 
-    def to_df(self) -> DataFrame:
-        return self.scan()
-
     def count_rows(self, _debug: bool = False):
         """Exact VISIBLE row count, metadata-first (the Iceberg/Delta
         count-star pushdown): per-file footer row counts were harvested at
@@ -730,8 +736,8 @@ class LakeTable:
         count(*) is then O(metadata) + O(the exceptional files), not a
         full scan. Returns an int; ``_debug`` returns
         (total, n_meta_files, n_slow_files, n_slow_buckets) for tests."""
-        snap = self._hydrate(self.snapshot())
-        has_tombstones = DELETED_COL in {f.name for f in self.schema.fields}
+        snap = self.snapshot()
+        has_tombstones = DELETED_COL in {f["name"] for f in snap["schema"]["fields"]}
         total = 0
         n_meta = 0
         slow_buckets: list[int] = []
@@ -904,12 +910,9 @@ class LakeTable:
 
         replaced = {int(b) for b in buckets}
         sid = (base_snapshot or self.snapshot())["current_schema_id"]
-        state = {"fenced": False}
 
         def mutate(snap):
-            state["fenced"] = False
-            if fence is not None and _is_fenced(snap, fence["epoch_id"]):
-                state["fenced"] = True
+            if not _fence_gate(snap, fence):
                 return None  # already committed — exactly-once replay no-op
             if base_snapshot is not None and snap["version"] != base_snapshot["version"]:
                 for b in replaced:
@@ -920,25 +923,13 @@ class LakeTable:
                             "re-run the merge against the current snapshot"
                         )
             for b in replaced:
-                snap["files"][str(b)] = [
-                    {**e, "schema_id": sid} for e in new_files.get(str(b), [])
-                ]
-            for b_str, entries in new_files.items():
-                if int(b_str) not in replaced:  # defensive: stray bucket → append
-                    snap["files"][b_str] = snap["files"].get(b_str, []) + [
-                        {**e, "schema_id": sid} for e in entries
-                    ]
-            if fence is not None:
-                snap["fences"][str(fence["epoch_id"])] = {
-                    k: v for k, v in fence.items() if k != "epoch_id"
-                }
+                snap["files"][str(b)] = []
+            _add_entries(snap, new_files, schema_id=sid)  # stray b: appended
             snap["lineage"] = lineage or []
             return snap
 
-        out = self.commit(mutate)
-        if state["fenced"]:
-            return None  # orphan data files reclaimed by vacuum_files
-        return out
+        # a declined (fenced) commit leaves orphan files for vacuum_files
+        return self.commit(mutate)
 
     def append_delta_buckets(
         self,
@@ -967,35 +958,22 @@ class LakeTable:
         }:
             raise ValueError("merge-on-read requires a keyed CDC table")
         new_files = self._write_data(df, target_partitions, files_per_bucket)
-        state = {"fenced": False}
 
         def mutate(s):
-            state["fenced"] = False
-            if fence is not None and _is_fenced(s, fence["epoch_id"]):
-                state["fenced"] = True
+            if not _fence_gate(s, fence):
                 return None  # exactly-once replay no-op
-            sid = schema_id or s["current_schema_id"]
             # "seq" = the committing snapshot's version: scan's resolve uses
             # it to break delta-vs-delta lsn ties deterministically in favor
             # of the FIRST-applied commit (parity with CoW's current-row-wins
             # tie rule; max_by alone would pick an arbitrary winner)
-            seq = s["version"] + 1
-            for b_str, entries in new_files.items():
-                s["files"][b_str] = s["files"].get(b_str, []) + [
-                    {**e, "schema_id": sid, "delta": True, "seq": seq}
-                    for e in entries
-                ]
-            if fence is not None:
-                s["fences"][str(fence["epoch_id"])] = {
-                    k: v for k, v in fence.items() if k != "epoch_id"
-                }
+            _add_entries(
+                s, new_files, schema_id=schema_id or s["current_schema_id"],
+                delta=True, seq=s["version"] + 1,
+            )
             s["lineage"] = lineage or []
             return s
 
-        out = self.commit(mutate)
-        if state["fenced"]:
-            return None  # orphan files reclaimed by vacuum_files
-        return out
+        return self.commit(mutate)
 
     def append(self, df: DataFrame, lineage: list[dict] | None = None) -> dict:
         """Append-only commit (seeding / fact-append use; reference analog:
@@ -1019,11 +997,7 @@ class LakeTable:
         new_files = self._write_data(df.withColumn(BUCKET_COL, bexpr))
 
         def mutate(s):
-            for b_str, new_entries in new_files.items():
-                entries = [
-                    {**e, "schema_id": s["current_schema_id"]} for e in new_entries
-                ]
-                s["files"][b_str] = s["files"].get(b_str, []) + entries
+            _add_entries(s, new_files, schema_id=s["current_schema_id"])
             s["lineage"] = lineage or []
             return s
 
@@ -1056,10 +1030,7 @@ class LakeTable:
         for folded epochs; the lineage history in older snapshots keeps
         them until vacuum. Returns the new snapshot, or None if nothing
         folded. Safe to call periodically from a maintenance loop."""
-        state = {"folded": False}
-
         def mutate(snap):
-            state["folded"] = False
             floor = int(snap.get("fence_floor", -1))
             fenced = {int(k) for k in snap["fences"]}
             new_floor = floor
@@ -1071,12 +1042,9 @@ class LakeTable:
             snap["fences"] = {
                 k: v for k, v in snap["fences"].items() if int(k) > new_floor
             }
-            snap["lineage"] = []
-            state["folded"] = True
             return snap
 
-        out = self.commit(mutate)
-        return out if state["folded"] else None
+        return self.commit(mutate)
 
     # ------------------------------------------------------------ time travel
     def snapshot_at(self, version: int | str) -> dict:
@@ -1086,11 +1054,9 @@ class LakeTable:
             if version not in tags:
                 raise ValueError(f"tag {version!r} does not exist")
             version = int(tags[version])
-        p = os.path.join(self._meta_dir, f"v{version:08d}.json")
-        if not os.path.exists(p):
+        if not os.path.exists(os.path.join(self._meta_dir, f"v{version:08d}.json")):
             raise ValueError(f"snapshot version {version} does not exist")
-        with open(p) as f:
-            return self._hydrate(json.load(f))
+        return self._open(version)
 
     def scan_at(self, version: int | str, include_deleted: bool = False) -> DataFrame:
         """Time travel: read the table as of an earlier snapshot — by
@@ -1127,7 +1093,6 @@ class LakeTable:
                 )
             tags[name] = v
             snap["tags"] = tags
-            snap["lineage"] = []
             state["version"] = v
             return snap
 
@@ -1144,7 +1109,6 @@ class LakeTable:
                 return None
             del tags[name]
             snap["tags"] = tags
-            snap["lineage"] = []
             return snap
 
         self.commit(mutate)
@@ -1161,14 +1125,10 @@ class LakeTable:
             snap["files"] = old["files"]
             # carrying the old manifest pointers lets _write_snapshot reuse
             # them: a rollback commit writes NO new manifests
-            if "manifests" in old:
-                snap["manifests"] = old["manifests"]
-            else:
-                snap.pop("manifests", None)  # legacy inline-files snapshot
+            snap["manifests"] = old["manifests"]
             snap["schema"] = old["schema"]
             snap["schemas"] = {**old["schemas"], **snap["schemas"]}
             snap["current_schema_id"] = old["current_schema_id"]
-            snap["lineage"] = []
             return snap
 
         return self.commit(mutate)
@@ -1422,13 +1382,9 @@ class LakeTable:
                     f"table changed during rebucket (snapshot "
                     f"{snap['version']} → {s['version']}); retry rebucket"
                 )
-            sid = s["current_schema_id"]
             s["num_buckets"] = int(new_num_buckets)
-            s["files"] = {
-                b: [{**e, "schema_id": sid} for e in entries]
-                for b, entries in new_files.items()
-            }
-            s["lineage"] = []
+            s["files"] = {}
+            _add_entries(s, new_files, schema_id=s["current_schema_id"])
             return s
 
         return self.commit(mutate)
@@ -1444,31 +1400,39 @@ class LakeTable:
         every file provably has no qualifying tombstone carry forward
         untouched — maintenance cost ∝ qualifying-bucket bytes, not table
         bytes. Files without stats are conservatively rewritten."""
-        snap = self.snapshot()
-        if "_deleted" not in {f.name for f in self.schema.fields}:
+        if DELETED_COL not in {f.name for f in self.schema.fields}:
             return None
 
-        def may_qualify(entry: dict) -> bool:
+        def may_hold(entry: dict) -> bool:
             stats = entry.get("stats") or {}
             d, l = stats.get(DELETED_COL), stats.get(LAST_LSN_COL)
             has_tombstone = d is None or bool(d["max"])
             old_enough = l is None or l["min"] < below_lsn
             return has_tombstone and old_enough
 
+        return self._drop_where(
+            may_hold,
+            F.coalesce(F.col(DELETED_COL), F.lit(False))
+            & (F.col(LAST_LSN_COL) < F.lit(below_lsn)),
+        )
+
+    def _drop_where(self, may_hold, drop) -> dict | None:
+        """Delete the rows matching Column ``drop``, rewriting only buckets
+        with a file entry that ``may_hold`` one (a zone-map test); the rest
+        carry forward. Returns the new snapshot, or None if none may."""
+        snap = self.snapshot()
         buckets = sorted(
             int(b)
             for b, entries in snap["files"].items()
-            if any(may_qualify(e) for e in entries)
+            if any(may_hold(e) for e in entries)
         )
         if not buckets:
             return None
-        rows = self.scan(buckets, snap, include_deleted=True)
-        kept = rows.filter(
-            ~(
-                F.coalesce(F.col("_deleted"), F.lit(False))
-                & (F.col("_last_lsn") < F.lit(below_lsn))
-            )
-        ).withColumn(BUCKET_COL, bucket_expr(snap["bucket_key"], snap["num_buckets"]))
+        kept = (
+            self.scan(buckets, snap, include_deleted=True)
+            .filter(~drop)
+            .withColumn(BUCKET_COL, bucket_expr(snap["bucket_key"], snap["num_buckets"]))
+        )
         return self.replace_buckets(kept, buckets, base_snapshot=snap)
 
     def vacuum_files(self, keep_snapshots: int = 2) -> list[str]:
@@ -1512,22 +1476,24 @@ class LakeTable:
         return deleted
 
     def lineage_df(self) -> DataFrame:
-        """All lineage rows across all snapshots, as a DataFrame."""
-        from battetl_spark.schemas import LINEAGE_SCHEMA
+        """All lineage rows across all retained snapshots, as a DataFrame."""
+        return lineage_frame(self.spark, [
+            {**r, "snapshot_id": root["snapshot_id"]}
+            for root in self._roots()
+            for r in root["lineage"]
+        ])
 
-        rows = []
-        for p in sorted(glob.glob(os.path.join(self._meta_dir, "v*.json"))):
-            with open(p) as f:
-                snap = json.load(f)
-            for r in snap.get("lineage", []):
-                r = dict(r)
-                r["snapshot_id"] = snap["snapshot_id"]
-                r["committed_at"] = datetime.fromisoformat(r["committed_at"])
-                r.setdefault("rebases", 0)  # rows from pre-rebase-metric snaps
-                rows.append(r)
-        if not rows:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+
+def lineage_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Snapshot lineage rows (plus ``snapshot_id``) → LINEAGE_SCHEMA frame."""
+    from battetl_spark.schemas import LINEAGE_SCHEMA
+
+    rows = [{**r, "committed_at": datetime.fromisoformat(r["committed_at"])}
+            for r in rows]
+    return spark.createDataFrame(
+        [tuple(r[n] for n in LINEAGE_SCHEMA.fieldNames()) for r in rows],
+        LINEAGE_SCHEMA,
+    )
 
 
 def utc_now_iso() -> str:

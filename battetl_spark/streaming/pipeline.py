@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from battetl_spark.cdc.merge import merge_apply
-from battetl_spark.lake.table import LakeTable
+from battetl_spark.lake.table import LakeTable, lineage_frame
 from battetl_spark.schemas import CHANGE_EVENT_SCHEMA
 
 
@@ -75,7 +75,34 @@ def windowed_metrics_stream(
     )
 
 
-class CdcStream:
+class _MicrobatchDriver:
+    """``foreachBatch(self._apply)`` over a streaming source, checkpointed
+    in ``self.checkpoint_dir`` — the driver loop ``CdcStream`` and
+    ``analytics.CleanerStream`` share."""
+
+    def start(
+        self,
+        events: DataFrame,
+        available_now: bool = True,
+        processing_time: str | None = None,
+    ) -> StreamingQuery:
+        writer = events.writeStream.foreachBatch(self._apply).option(
+            "checkpointLocation", self.checkpoint_dir
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        elif processing_time:
+            writer = writer.trigger(processingTime=processing_time)
+        return writer.start()
+
+    def run_to_completion(self, events: DataFrame, timeout_s: int = 600) -> None:
+        q = self.start(events, available_now=True)
+        q.awaitTermination(timeout_s)
+        if q.exception() is not None:
+            raise RuntimeError(str(q.exception()))
+
+
+class CdcStream(_MicrobatchDriver):
     """Drives a change-event stream into a LakeTable with exactly-once
     fenced merges. ``on_batch`` (tests/metrics) runs after each merge."""
 
@@ -215,23 +242,9 @@ class CdcStream:
                         stacklevel=2,
                     )
             if rows:
-                from datetime import datetime
-
-                from battetl_spark.schemas import LINEAGE_SCHEMA
-
-                spark = batch_df.sparkSession
-                rows = [
-                    {
-                        **r,
-                        "rebases": r.get("rebases", 0),
-                        "committed_at": datetime.fromisoformat(r["committed_at"]),
-                    }
-                    for r in rows
-                ]
-                spark.createDataFrame(
-                    [tuple(r[f.name] for f in LINEAGE_SCHEMA.fields) for r in rows],
-                    LINEAGE_SCHEMA,
-                ).coalesce(1).write.mode("append").parquet(self.metrics_dir)
+                lineage_frame(batch_df.sparkSession, rows).coalesce(1).write.mode(
+                    "append"
+                ).parquet(self.metrics_dir)
         if self.on_batch is not None:
             self.on_batch(epoch_id, result)
 
@@ -256,51 +269,21 @@ class CdcStream:
         retained snapshot carrying the fence, whose parent is retained and
         does NOT carry it) — if that commit has no lineage for the epoch,
         lineage collection was simply off when it ran, not vacuumed away."""
-        import glob
-        import json
-        import os
-
-        meta = os.path.join(self.table.path, "metadata")
         epoch = int(epoch_id)
-        snaps = []
-        for p in sorted(glob.glob(os.path.join(meta, "v*.json"))):
-            with open(p) as f:
-                snaps.append(json.load(f))
-        fenced_versions = set()
-        for snap in snaps:
-            if str(epoch) in snap.get("fences", {}):
+        retained, fenced_versions = set(), set()
+        for snap in self.table._roots():
+            retained.add(snap["version"])
+            if str(epoch) in snap["fences"]:
                 fenced_versions.add(snap["version"])
             rows = [
                 {**r, "snapshot_id": snap["snapshot_id"]}
-                for r in snap.get("lineage", [])
-                if r.get("epoch_id") == epoch
+                for r in snap["lineage"]
+                if r["epoch_id"] == epoch
             ]
             if rows:
                 return rows, True
-        retained = {s["version"] for s in snaps}
         fencing_seen = any(
             v - 1 in retained and v - 1 not in fenced_versions
             for v in fenced_versions
         )
         return [], fencing_seen
-
-    def start(
-        self,
-        events: DataFrame,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        writer = events.writeStream.foreachBatch(self._apply).option(
-            "checkpointLocation", self.checkpoint_dir
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
-
-    def run_to_completion(self, events: DataFrame, timeout_s: int = 600) -> None:
-        q = self.start(events, available_now=True)
-        q.awaitTermination(timeout_s)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))

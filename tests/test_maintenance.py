@@ -518,11 +518,16 @@ def test_clustered_compaction_enables_range_file_skipping(spark, tmp_path):
 
 def test_clustered_compaction_persists_stats_property(spark, tmp_path):
     """A non-implicit cluster column must land in the stats_cols property so
-    future writes keep harvesting it; unknown columns are refused."""
+    future writes keep harvesting it; unknown columns are refused. The
+    property commit and the rewrite are maintenance commits: they must not
+    re-commit the seeding merge's lineage rows."""
     t = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_TABLE_SCHEMA,
                          num_buckets=2, key_cols=KEY_COLS, sort_cols=KEY_COLS)
-    base = FX.make_transcripts(seed=32, n_convs=10, max_turns=4)
-    t.append(FX.table_rows_df(spark, base))
+    ev = FX.make_change_events(seed=32, n_events=120, n_convs=10, max_turns=4)
+    assert merge_apply(t, FX.change_events_df(spark, ev), epoch_id=0).applied
+    want = t.scan().toPandas()
+    n_lineage = t.lineage_df().count()
+    assert n_lineage > 0
 
     with pytest.raises(ValueError, match="cluster_by"):
         t.compact(min_files_per_bucket=1, cluster_by="nope")
@@ -535,8 +540,8 @@ def test_clustered_compaction_persists_stats_property(spark, tmp_path):
         "turn_idx" in e.get("stats", {})
         for entries in snap["files"].values() for e in entries
     )
+    assert t.lineage_df().count() == n_lineage
     got = t.scan().toPandas()
-    want = FX.table_rows_df(spark, base).toPandas()
     assert_pdf_equal(got[ALL], want[ALL], ["conv_id", "turn_idx"])
 
 
