@@ -346,16 +346,6 @@ class IncrementalCorpusCleaner:
             "kept": int(result.rows_inserted + result.rows_updated),
         }
 
-    # ----------------------------------------------------------- maintenance
-    def compact(self, min_files_per_bucket: int = 16) -> None:
-        """Fold crowded buckets across the cleaner's three state tables
-        (output, digest index, signature index) — each accretes one file
-        per touched bucket per batch, so a long-running ingest unbounded by
-        compaction pays O(epochs) read amplification on every scan. Each
-        fold is an independent snapshot-atomic copy-on-write commit."""
-        for t in (self.out, self.digests, self.sig.table):
-            t.compact(min_files_per_bucket=min_files_per_bucket)
-
     # ----------------------------------------------------------------- read
     def result(self) -> DataFrame:
         """Current cleaned-corpus state — (doc_id, lang, q_score), the
@@ -413,33 +403,19 @@ class CleanerStream(_MicrobatchDriver):
         auto_compact_files: int | None = 16,
         auto_compact_fences_every: int | None = 64,
     ):
+        super().__init__(
+            checkpoint_dir, on_batch, fail_injector,
+            auto_compact_files, auto_compact_fences_every,
+        )
         self.cleaner = cleaner
-        self.checkpoint_dir = checkpoint_dir
-        self.on_batch = on_batch
-        self.fail_injector = fail_injector  # (epoch_id, phase) -> None|raise
-        # the cleaner's three state tables each accrete one file per touched
-        # bucket per batch (same growth as CdcStream's merge target) — fold
-        # crowded buckets when they cross this threshold. None disables.
-        self.auto_compact_files = auto_compact_files
-        # the output table's fence map otherwise grows one entry per epoch
-        # for the stream's lifetime; fold the contiguous fenced prefix every
-        # N epochs (compact_fences never un-fences). None disables.
-        self.auto_compact_fences_every = auto_compact_fences_every
 
     def _apply(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self.fail_injector is not None:
-            self.fail_injector(epoch_id, "before_add")
+        self._inject(epoch_id, "before_add")
         r = self.cleaner.add_batch(batch_df, epoch_id=epoch_id)
-        if self.fail_injector is not None:
-            self.fail_injector(epoch_id, "after_add")
-        # maintenance AFTER the batch lands: a crash in here replays the
-        # (idempotent) batch and re-attempts the folds — both harmless
-        if self.auto_compact_files is not None:
-            self.cleaner.compact(min_files_per_bucket=self.auto_compact_files)
-        if (
-            self.auto_compact_fences_every is not None
-            and epoch_id % self.auto_compact_fences_every == 0
-        ):
-            self.cleaner.out.compact_fences()
+        self._inject(epoch_id, "after_add")
+        # the cleaner's three state tables (output, digest index, signature
+        # index) each accrete one file per touched bucket per batch
+        c = self.cleaner
+        self._maintain((c.out, c.digests, c.sig.table), epoch_id)
         if self.on_batch is not None:
             self.on_batch(epoch_id, r)

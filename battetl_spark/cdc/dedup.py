@@ -23,15 +23,14 @@ from battetl_spark.schemas import KEY_COLS
 def lww_winners(
     events: DataFrame,
     key_cols: list[str] | None = None,
-    order_col: str = "lsn",
 ) -> DataFrame:
-    """Reduce a change-event batch to one winner per key (max order_col).
+    """Reduce a change-event batch to one winner per key (max lsn).
 
     Output schema == input schema, one row per distinct key.
     """
     key_cols = key_cols or KEY_COLS
     payload = [c for c in events.columns if c not in key_cols]
     won = events.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*payload), F.col(order_col)).alias("__w")
+        F.max_by(F.struct(*payload), F.col("lsn")).alias("__w")
     )
     return won.select(*key_cols, *[F.col(f"__w.{c}").alias(c) for c in payload])

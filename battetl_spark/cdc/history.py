@@ -49,9 +49,9 @@ from pyspark.sql import types as T
 
 from battetl_spark.cdc.merge import (
     CHANGE_COL,
-    ENVELOPE_COLS,
     MergeResult,
     _apply_fenced,
+    _payload_fields,
 )
 from battetl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
 
@@ -64,14 +64,6 @@ _META_FIELDS = [
     T.StructField(VALID_FROM, T.LongType(), False),
     T.StructField(VALID_TO, T.LongType(), True),
 ]
-
-
-def _incoming_history_schema(events: DataFrame) -> T.StructType:
-    """History-table schema implied by an event batch: payload columns +
-    the versioning meta (mirrors merge's _incoming_table_schema, so the
-    same add/widen gate applies to the history sink)."""
-    fields = [f for f in events.schema.fields if f.name not in ENVELOPE_COLS]
-    return T.StructType(fields + _META_FIELDS)
 
 
 def history_rows(
@@ -155,22 +147,12 @@ class HistoryTable:
         )
         return cls(table)
 
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "HistoryTable":
-        return cls(LakeTable.load(spark, path))
-
-    @property
-    def key_cols(self) -> list[str]:
-        return self.table.snapshot()["key_cols"]
-
     # ----------------------------------------------------------------- apply
     def apply(
         self,
         events: DataFrame,
         epoch_id: int | None = None,
         collect_lineage: bool = True,
-        target_partitions: int | None = None,
-        conflict_retries: int = 2,
     ) -> MergeResult:
         """Apply one change-event batch (envelope columns ``lsn``, ``op``,
         optional ``source_partition``) exactly once.
@@ -188,11 +170,9 @@ class HistoryTable:
             self.table,
             events,
             epoch_id,
-            _incoming_history_schema(events),
+            T.StructType(_payload_fields(events) + _META_FIELDS),
             partial(self._resolve, events),
             collect_lineage=collect_lineage,
-            target_partitions=target_partitions,
-            conflict_retries=conflict_retries,
         )
 
     def _resolve(

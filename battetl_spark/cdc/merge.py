@@ -21,8 +21,10 @@ implemented as a bucket-pruned copy-on-write plan:
 
 Steps 1, 2 and 5 (plus the envelope aggregate, lineage rows and the
 CommitConflict rebase loop) are ``_apply_fenced``, the one skeleton that the
-CoW and MOR merge modes and the SCD-2 history sink
-(battetl_spark.cdc.history) share; each mode supplies only its resolve.
+CoW and MOR merge modes, the SCD-2 history sink (battetl_spark.cdc.history)
+and the conversation-stats sink (battetl_spark.cdc.stats_maintenance)
+share; each supplies only its resolve. It is the only code that writes an
+epoch fence.
 
 Scale: cost ∝ (batch size + touched-bucket bytes). num_buckets is the knob —
 at 100 TB with 4096 buckets a batch touching 1% of conversations reads/writes
@@ -53,6 +55,8 @@ ENVELOPE_COLS = ("lsn", "op", "source_partition")
 # per-row change tag a resolve step emits: inserted / updated / deleted /
 # unchanged — the lineage counts group on it
 CHANGE_COL = "__change"
+# CommitConflict rebases an apply absorbs before it gives up
+CONFLICT_RETRIES = 2
 
 
 @dataclass
@@ -70,11 +74,11 @@ class MergeResult:
     rebases: int = 0
 
 
-def _incoming_table_schema(events: DataFrame) -> T.StructType:
-    """Row-image schema implied by an event batch = payload cols + _last_lsn."""
-    fields = [f for f in events.schema.fields if f.name not in ENVELOPE_COLS]
-    fields.append(T.StructField(LAST_LSN_COL, T.LongType(), False))
-    return T.StructType(fields)
+def _payload_fields(events: DataFrame) -> list[T.StructField]:
+    """An event batch's row-image columns (everything but the envelope):
+    merge and history add their own bookkeeping columns to these, so one
+    add/widen gate serves both sinks."""
+    return [f for f in events.schema.fields if f.name not in ENVELOPE_COLS]
 
 
 # ------------------------------------------------------ the shared skeleton
@@ -159,29 +163,28 @@ def _apply_fenced(
     *,
     delta: bool = False,
     collect_lineage: bool,
-    target_partitions: int | None,
-    conflict_retries: int,
 ) -> MergeResult:
     """Apply one change-event batch exactly once: the skeleton every apply
-    mode shares (CoW and MOR merge, SCD-2 history).
+    mode shares (CoW and MOR merge, SCD-2 history, conversation stats).
 
     ``resolve(schema, snap, buckets)`` is the mode: it returns the rows to
-    commit (BUCKET_COL included) plus ``source_partition`` and the
-    CHANGE_COL tag. ``delta`` picks the commit: False rewrites the touched
-    buckets (``replace_buckets``, conflict-detected against the scanned
-    snapshot), True appends delta files (``append_delta_buckets``).
+    commit (BUCKET_COL included) plus, when ``collect_lineage``,
+    ``source_partition`` and the CHANGE_COL tag. ``delta`` picks the
+    commit: False rewrites the touched buckets (``replace_buckets``,
+    conflict-detected against the scanned snapshot), True appends delta
+    files (``append_delta_buckets``).
 
     A concurrent writer that lands on an overlapping bucket between our scan
     and our commit aborts the commit with CommitConflict; the apply then
-    RE-RUNS against the fresh snapshot (up to ``conflict_retries`` times) —
+    RE-RUNS against the fresh snapshot (up to CONFLICT_RETRIES times) —
     a rebase, never a blind re-apply. Delta appends commute with concurrent
     writers and never conflict."""
     last: CommitConflict | None = None
-    for attempt in range(conflict_retries + 1):
+    for attempt in range(CONFLICT_RETRIES + 1):
         try:
             return _apply_fenced_once(
                 table, events, epoch_id, incoming, resolve, delta,
-                collect_lineage, target_partitions, rebases=attempt,
+                collect_lineage, rebases=attempt,
             )
         except CommitConflict as e:
             last = e  # rebase: everything re-derives from a fresh snapshot
@@ -196,7 +199,6 @@ def _apply_fenced_once(
     resolve,
     delta: bool,
     collect_lineage: bool,
-    target_partitions: int | None,
     rebases: int,
 ) -> MergeResult:
     if epoch_id is not None and table.has_fence(epoch_id):
@@ -236,7 +238,6 @@ def _apply_fenced_once(
                 rows,
                 fence=fence,
                 lineage=lineage,
-                target_partitions=target_partitions,
                 schema_id=snap["current_schema_id"],
             )
         else:
@@ -245,7 +246,6 @@ def _apply_fenced_once(
                 buckets,
                 fence=fence,
                 lineage=lineage,
-                target_partitions=target_partitions,
                 base_snapshot=snap,  # conflict-detect: abort if a concurrent
                 # writer changed any of these buckets since we scanned them
             )
@@ -380,8 +380,6 @@ def merge_apply(
     epoch_id: int | None = None,
     key_cols: list[str] | None = None,
     collect_lineage: bool = True,
-    target_partitions: int | None = None,
-    conflict_retries: int = 2,
     mode: str = "cow",
 ) -> MergeResult:
     """Apply one batch of change events to the table, exactly once.
@@ -405,7 +403,7 @@ def merge_apply(
 
     Both modes run ``_apply_fenced`` (fence check, schema gate, envelope
     aggregate, lineage rows, fenced commit, CommitConflict rebase up to
-    ``conflict_retries`` times); the SCD-2 history sink runs it too.
+    CONFLICT_RETRIES times); the SCD-2 history and stats sinks run it too.
 
     ``epoch_id`` fences the commit: if this epoch is already in the table's
     fence map the batch is skipped entirely (idempotent replay). With
@@ -423,12 +421,12 @@ def merge_apply(
         table,
         events,
         epoch_id,
-        _incoming_table_schema(events),
+        T.StructType(
+            _payload_fields(events) + [T.StructField(LAST_LSN_COL, T.LongType(), False)]
+        ),
         resolve,
         delta=mode == "mor",
         collect_lineage=collect_lineage,
-        target_partitions=target_partitions,
-        conflict_retries=conflict_retries,
     )
 
 

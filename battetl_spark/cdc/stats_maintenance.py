@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from battetl_spark.analytics.rollups import conversation_stats
+from battetl_spark.cdc.merge import MergeResult, _apply_fenced
 from battetl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
 
 STATS_TABLE_SCHEMA = T.StructType(
@@ -54,57 +55,61 @@ def refresh_stats(
     stats: LakeTable,
     touched_conv_ids: DataFrame,
     epoch_id: int | None = None,
-) -> dict:
+) -> MergeResult:
     """Recompute rollups for the given conversations (bucket-pruned base
     scan) and replace their rows in the stats table (U2 overwrite
     semantics — a conversation whose turns were all deleted gets a
-    tombstone)."""
-    snap = transcripts.snapshot()
-    keys = touched_conv_ids.select("conv_id").distinct()
-    buckets = sorted(
-        r[0]
-        for r in keys.select(
-            bucket_expr(snap["bucket_key"], snap["num_buckets"]).alias("b")
-        ).distinct().collect()
-    )
-    base = transcripts.scan(buckets, snap).join(F.broadcast(keys), "conv_id")
-    fresh = conversation_stats(base)
+    tombstone).
 
-    s_snap = stats.snapshot()
-    s_bexpr = bucket_expr(s_snap["bucket_key"], s_snap["num_buckets"])
-    s_buckets = sorted(
-        r[0] for r in keys.select(s_bexpr.alias("b")).distinct().collect()
-    )
-    current = stats.scan(s_buckets, s_snap, include_deleted=True)
-    # conversations now gone entirely → tombstone rows
-    gone = keys.join(fresh.select("conv_id"), "conv_id", "left_anti")
-    replacement = (
-        current.join(keys, "conv_id", "left_anti")  # untouched convs carry over
-        .unionByName(
-            fresh.select(
-                "*",
-                F.lit(0).cast("long").alias("_last_lsn"),
-                F.lit(False).alias("_deleted"),
-            ),
-            allowMissingColumns=True,
+    Commits through ``merge._apply_fenced`` with the touched keys as events
+    at ``lsn = 0``: a fenced ``epoch_id`` is a no-op (``applied=False``), and
+    a rival stats commit on an overlapping bucket between scan and commit
+    is absorbed by a rebase (``MergeResult.rebases``). Lineage is not
+    collected, so the row counts stay 0."""
+    keys = touched_conv_ids.select("conv_id").distinct()
+
+    def resolve(schema, s_snap, s_buckets):
+        snap = transcripts.snapshot()
+        buckets = sorted(
+            r[0]
+            for r in keys.select(
+                bucket_expr(snap["bucket_key"], snap["num_buckets"]).alias("b")
+            ).distinct().collect()
         )
-        .unionByName(
-            gone.select(
-                "conv_id",
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in STATS_TABLE_SCHEMA.fields
-                    if f.name not in ("conv_id", "_last_lsn", "_deleted")
-                ],
-                F.lit(0).cast("long").alias("_last_lsn"),
-                F.lit(True).alias("_deleted"),
-            ),
-            allowMissingColumns=True,
+        base = transcripts.scan(buckets, snap).join(F.broadcast(keys), "conv_id")
+        fresh = conversation_stats(base)
+
+        current = stats.scan(s_buckets, s_snap, include_deleted=True)
+        # conversations now gone entirely → tombstone rows
+        gone = keys.join(fresh.select("conv_id"), "conv_id", "left_anti")
+        return (
+            current.join(keys, "conv_id", "left_anti")  # untouched convs carry over
+            .unionByName(
+                fresh.select(
+                    "*",
+                    F.lit(0).cast("long").alias("_last_lsn"),
+                    F.lit(False).alias("_deleted"),
+                ),
+                allowMissingColumns=True,
+            )
+            .unionByName(
+                gone.select(  # stats columns absent → typed NULLs
+                    "conv_id",
+                    F.lit(0).cast("long").alias("_last_lsn"),
+                    F.lit(True).alias("_deleted"),
+                ),
+                allowMissingColumns=True,
+            )
+            .withColumn(
+                BUCKET_COL, bucket_expr(s_snap["bucket_key"], s_snap["num_buckets"])
+            )
         )
-        .withColumn(BUCKET_COL, s_bexpr)
+
+    return _apply_fenced(
+        stats,
+        keys.withColumn("lsn", F.lit(0).cast("long")),
+        epoch_id,
+        STATS_TABLE_SCHEMA,
+        resolve,
+        collect_lineage=False,
     )
-    fence = None if epoch_id is None else {"epoch_id": int(epoch_id), "max_lsn": 0}
-    out = stats.replace_buckets(
-        replacement, s_buckets, fence=fence, base_snapshot=s_snap
-    )
-    return out if out is not None else stats.snapshot()  # fenced replay no-op

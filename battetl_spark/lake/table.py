@@ -61,6 +61,8 @@ BUCKET_COL = "__bucket"
 LAST_LSN_COL = "_last_lsn"  # row-version column (same name as schemas.py —
 DELETED_COL = "_deleted"    # defined here too to avoid a circular import)
 _HINT = "version-hint.txt"
+# version collisions ``LakeTable.commit`` retries before raising CommitConflict
+_COMMIT_RETRIES = 10
 
 # ---------------------------------------------------------------- zone maps
 # Per-file min/max column statistics ("zone maps") harvested from the parquet
@@ -416,11 +418,11 @@ class LakeTable:
             f.write(str(snap["version"]))
         os.replace(tmp, os.path.join(self._meta_dir, _HINT))
 
-    def commit(self, mutate, max_retries: int = 10) -> dict | None:
+    def commit(self, mutate) -> dict | None:
         """Optimistic commit: mutate(copy-of-current, lineage emptied) -> new
         snapshot dict, or None to decline (then returns None). Retries on
         version collision."""
-        for _ in range(max_retries):
+        for _ in range(_COMMIT_RETRIES):
             cur = self.snapshot()
             new = mutate(copy.deepcopy({**cur, "lineage": []}))
             if new is None:
@@ -433,7 +435,7 @@ class LakeTable:
                 return new
             except FileExistsError:
                 continue
-        raise CommitConflict(f"commit lost {max_retries} races at {self.path}")
+        raise CommitConflict(f"commit lost {_COMMIT_RETRIES} races at {self.path}")
 
     # ---------------------------------------------------------------- schema
     @property
@@ -936,8 +938,6 @@ class LakeTable:
         df: DataFrame,
         fence: dict | None = None,
         lineage: list[dict] | None = None,
-        target_partitions: int | None = None,
-        files_per_bucket: int = 4,
         schema_id: str | None = None,
     ) -> dict | None:
         """Merge-on-read commit: append ``df`` (batch winners carrying
@@ -957,7 +957,7 @@ class LakeTable:
             f["name"] for f in snap["schema"]["fields"]
         }:
             raise ValueError("merge-on-read requires a keyed CDC table")
-        new_files = self._write_data(df, target_partitions, files_per_bucket)
+        new_files = self._write_data(df)
 
         def mutate(s):
             if not _fence_gate(s, fence):
@@ -1474,6 +1474,35 @@ class LakeTable:
                 os.remove(p)
                 deleted.append(p)
         return deleted
+
+    def epoch_lineage(self, epoch_id: int) -> tuple[list[dict], bool]:
+        """This epoch's lineage rows (plus ``snapshot_id``) from the retained
+        snapshot roots — the commit that fenced the epoch embedded them
+        atomically with the data.
+
+        Returns ``(rows, fencing_commit_seen)``: the second flag is True
+        when the PROVABLE fencing commit is still retained (the earliest
+        retained snapshot carrying the fence, whose parent is retained and
+        does NOT carry it) — if that commit has no lineage for the epoch,
+        lineage collection was simply off when it ran, not vacuumed away."""
+        epoch = int(epoch_id)
+        retained, fenced_versions = set(), set()
+        for root in self._roots():
+            retained.add(root["version"])
+            if str(epoch) in root["fences"]:
+                fenced_versions.add(root["version"])
+            rows = [
+                {**r, "snapshot_id": root["snapshot_id"]}
+                for r in root["lineage"]
+                if r["epoch_id"] == epoch
+            ]
+            if rows:
+                return rows, True
+        fencing_seen = any(
+            v - 1 in retained and v - 1 not in fenced_versions
+            for v in fenced_versions
+        )
+        return [], fencing_seen
 
     def lineage_df(self) -> DataFrame:
         """All lineage rows across all retained snapshots, as a DataFrame."""

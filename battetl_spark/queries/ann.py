@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from battetl_spark.queries._shared import _t
+from battetl_spark.queries._shared import _ingest_residues, _scratch, _t
 
 
 def q_ann_cosine_topk(spark, sf):
@@ -24,6 +24,19 @@ def q_ann_cosine_topk(spark, sf):
     return cosine_topk(emb, queries, k=10)
 
 
+def _planted_embeddings(spark, sf):
+    """The embeddings plus perturbed copies (x*0.999 + 0.0003, vec_id+100000)
+    of vec_id<25: the corpus both emb_near_dup queries search."""
+    emb = _t(spark, sf, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    planted = emb.filter(F.col("vec_id") < 25).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * 0.999 + 0.0003).alias("embedding"),
+    )
+    return emb.unionByName(planted)
+
+
 def q_emb_near_dup(spark, sf):
     """Embedding-cosine near-dup pairs (the embedding member of the dedup
     family): banded hyperplane-LSH candidates + exact-cosine verify. The
@@ -35,17 +48,10 @@ def q_emb_near_dup(spark, sf):
     has to not MISS pairs at cos≈0.999 (miss prob ~1e-38)."""
     from battetl_spark.analytics.similarity import embedding_near_dup_pairs
 
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    planted = emb.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 0.999 + 0.0003).alias("embedding"),
-    )
     # dim=64 is the embeddings table's schema contract (same constant the
     # ann_* queries pass) — skips the signs-frame max-size probe job
-    return embedding_near_dup_pairs(emb.unionByName(planted), threshold=0.9,
-                                    dim=64)
+    return embedding_near_dup_pairs(_planted_embeddings(spark, sf),
+                                    threshold=0.9, dim=64)
 
 
 def q_emb_near_dup_incremental(spark, sf):
@@ -54,33 +60,16 @@ def q_emb_near_dup_incremental(spark, sf):
     batches through analytics.EmbeddingIndex — the stored flip masks let an
     OLD smaller id probe toward a new vector's bucket, so the per-batch
     union equals the batch operator (and the exhaustive oracle) exactly."""
-    import tempfile
-
     from battetl_spark.analytics.sig_index import EmbeddingIndex
 
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    idx = EmbeddingIndex.create(spark, _scratch("emb_incr_") + "/idx")
+    # dim=64 is the embeddings table's schema contract (the same constant
+    # the batch query passes) — skips the per-batch signs-frame max-size
+    # probe job
+    return _ingest_residues(
+        _planted_embeddings(spark, sf), "vec_id",
+        lambda b: idx.add_batch(b, threshold=0.9, dim=64),
     )
-    planted = emb.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 0.999 + 0.0003).alias("embedding"),
-    )
-    corpus = emb.unionByName(planted)
-    idx = EmbeddingIndex.create(
-        spark, tempfile.mkdtemp(prefix="emb_incr_") + "/idx"
-    )
-    out = None
-    for i in range(3):
-        pairs = idx.add_batch(
-            corpus.filter(F.pmod(F.col("vec_id"), F.lit(3)) == i),
-            threshold=0.9,
-            # dim=64 is the embeddings table's schema contract (the same
-            # constant the batch query passes) — skips the per-batch
-            # signs-frame max-size probe job
-            dim=64,
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return out
 
 
 def q_ann_lsh_topk(spark, sf):

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from battetl_spark.queries._shared import _t
+from battetl_spark.queries._shared import _scratch, _t
 
 
 def q_lww_latest_per_key(spark, sf):
@@ -154,8 +154,6 @@ def q_cdc_history_incremental(spark, sf):
     three batches split by lsn%3 — every batch is late relative to the prior
     ones for most keys, so interval chains re-splice on each apply (CoW on
     touched buckets + epoch fences). Must equal the batch oracle exactly."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from battetl_spark.cdc.history import HistoryTable
@@ -171,24 +169,18 @@ def q_cdc_history_incremental(spark, sf):
             T.StructField("ts", T.TimestampNTZType(), True),
         ]
     )
-    import atexit
-    import shutil
-
-    scratch = tempfile.mkdtemp(prefix="hist_incr_")
-    # the returned frame reads the table lazily, so the directory must
-    # outlive this function — reclaim it at process exit instead of
-    # leaking one table per sweep invocation (round-6 advice fix)
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     h = HistoryTable.create(
         spark,
-        scratch + "/t",
+        _scratch("hist_incr_") + "/t",
         payload,
         key_cols=["user_id"],
         num_buckets=8,
     )
     for i, residue in enumerate((2, 0, 1)):
+        # the output never reads lineage: skip its persist + counts job
         h.apply(
-            ev.filter(F.pmod(F.col("lsn"), F.lit(3)) == residue), epoch_id=i
+            ev.filter(F.pmod(F.col("lsn"), F.lit(3)) == residue), epoch_id=i,
+            collect_lineage=False,
         )
     return _history_out(h.history())
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from battetl_spark.queries._shared import _t
+from battetl_spark.queries._shared import _ingest_residues, _scratch, _t
 
 
 def q_doc_exact_dedup(spark, sf):
@@ -92,24 +92,13 @@ def q_doc_minhash_incremental(spark, sf):
     (every unordered pair is found exactly once, by the batch ingesting its
     later member). Mirrors the reference's only-new-rows incremental load
     (/root/reference/battetl/load/Loader.py:144-234)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from battetl_spark.analytics.sig_index import MinHashIndex
 
-    docs = _t(spark, sf, "documents")
-    idx = MinHashIndex.create(
-        spark, tempfile.mkdtemp(prefix="mh_incr_") + "/idx"
+    idx = MinHashIndex.create(spark, _scratch("mh_incr_") + "/idx")
+    return _ingest_residues(
+        _t(spark, sf, "documents"), "doc_id",
+        lambda b: idx.add_batch(b, jaccard_threshold=0.8),
     )
-    out = None
-    for i in range(3):
-        pairs = idx.add_batch(
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i),
-            jaccard_threshold=0.8,
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return out
 
 
 def q_doc_dup_clusters(spark, sf):
@@ -153,23 +142,15 @@ def q_doc_dup_clusters_incremental(spark, sf):
     the full pair graph, and connected components close it. Final labels
     must equal the batch doc_dup_clusters answer (ground truth: the
     recursive-CTE transitive closure of the exhaustive pair graph)."""
-    import tempfile
-
     from battetl_spark.analytics.graph import dup_clusters
     from battetl_spark.analytics.sig_index import MinHashIndex
 
     docs = _t(spark, sf, "documents")
-    idx = MinHashIndex.create(
-        spark, tempfile.mkdtemp(prefix="mh_cc_") + "/idx"
+    idx = MinHashIndex.create(spark, _scratch("mh_cc_") + "/idx")
+    pairs = _ingest_residues(
+        docs, "doc_id", lambda b: idx.add_batch(b, jaccard_threshold=0.8)
     )
-    out = None
-    for i in range(3):
-        pairs = idx.add_batch(
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i),
-            jaccard_threshold=0.8,
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return dup_clusters(docs, out)
+    return dup_clusters(docs, pairs)
 
 
 def q_doc_decontaminate(spark, sf):
@@ -237,6 +218,15 @@ def q_corpus_clean(spark, sf):
     )
 
 
+def _cleaner(spark, path, **kw):
+    """An IncrementalCorpusCleaner with q_corpus_clean's filter settings."""
+    from battetl_spark.analytics.clean_stream import IncrementalCorpusCleaner
+
+    return IncrementalCorpusCleaner.create(
+        spark, path, min_quality=0.5, langs=("en", "de"), **kw
+    )
+
+
 def q_corpus_clean_incremental(spark, sf):
     """Round-5 capstone: the SAME cleaning pipeline maintained
     incrementally — three monotone doc_id batches flow through
@@ -244,15 +234,8 @@ def q_corpus_clean_incremental(spark, sf):
     output maintained via the engine's own fenced merge path); the final
     table state must equal the batch clean_corpus answer, so the oracle is
     identical to corpus_clean's."""
-    import tempfile
-
-    from battetl_spark.analytics.clean_stream import IncrementalCorpusCleaner
-
     docs = _t(spark, sf, "documents")
-    cl = IncrementalCorpusCleaner.create(
-        spark, tempfile.mkdtemp(prefix="cln_incr_") + "/c",
-        min_quality=0.5, langs=("en", "de"),
-    )
+    cl = _cleaner(spark, _scratch("cln_incr_") + "/c")
     lo, hi = (int(x) for x in docs.approxQuantile("doc_id", [0.33, 0.66], 0.0))
     conds = [
         F.col("doc_id") <= lo,
@@ -272,15 +255,8 @@ def q_corpus_clean_ooo(spark, sf):
     fenced merge (demoted exact winners + newly-dropped survivors). The
     final state must still equal the batch clean_corpus answer, so the
     oracle is identical to corpus_clean_incremental's."""
-    import tempfile
-
-    from battetl_spark.analytics.clean_stream import IncrementalCorpusCleaner
-
     docs = _t(spark, sf, "documents")
-    cl = IncrementalCorpusCleaner.create(
-        spark, tempfile.mkdtemp(prefix="cln_ooo_") + "/c",
-        min_quality=0.5, langs=("en", "de"), ordered=False,
-    )
+    cl = _cleaner(spark, _scratch("cln_ooo_") + "/c", ordered=False)
     for epoch, residue in enumerate((2, 0, 1)):
         cl.add_batch(
             docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == residue),
@@ -297,25 +273,17 @@ def q_corpus_clean_stream(spark, sf):
     the out-of-order cleaner. Must converge to the batch clean_corpus
     answer, so the oracle is identical to corpus_clean_incremental's."""
     import os
-    import tempfile
 
-    from battetl_spark.analytics.clean_stream import (
-        CleanerStream,
-        IncrementalCorpusCleaner,
-        read_document_stream,
-    )
+    from battetl_spark.analytics.clean_stream import CleanerStream, read_document_stream
 
     docs = _t(spark, sf, "documents").select("doc_id", "text", "lang")
-    d = tempfile.mkdtemp(prefix="cln_strm_")
+    d = _scratch("cln_strm_")
     for residue in (2, 0, 1):
         (
             docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == residue)
             .coalesce(1).write.mode("append").parquet(os.path.join(d, "drop"))
         )
-    cl = IncrementalCorpusCleaner.create(
-        spark, os.path.join(d, "c"),
-        min_quality=0.5, langs=("en", "de"), ordered=False,
-    )
+    cl = _cleaner(spark, os.path.join(d, "c"), ordered=False)
     CleanerStream(cl, os.path.join(d, "ckpt")).run_to_completion(
         read_document_stream(spark, os.path.join(d, "drop"))
     )
@@ -328,22 +296,13 @@ def q_doc_ngram_incremental(spark, sf):
     global hash order, so the three-batch union equals the batch operator
     and the exhaustive oracle exactly — the strongest-contract member of
     the incremental dedup family."""
-    import tempfile
-
     from battetl_spark.analytics.sig_index import NgramIndex
 
-    docs = _t(spark, sf, "documents")
-    idx = NgramIndex.create(
-        spark, tempfile.mkdtemp(prefix="ng_incr_") + "/idx"
+    idx = NgramIndex.create(spark, _scratch("ng_incr_") + "/idx")
+    return _ingest_residues(
+        _t(spark, sf, "documents"), "doc_id",
+        lambda b: idx.add_batch(b, threshold=0.4),
     )
-    out = None
-    for i in range(3):
-        pairs = idx.add_batch(
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i),
-            threshold=0.4,
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return out
 
 
 SPAN_K = 8
@@ -388,19 +347,12 @@ def q_doc_span_incremental(spark, sf):
     duplicate status is monotone under insert-only input and transitions
     back-emit stored occurrences, so the per-batch union equals the batch
     operator's duplicate-occurrence set under ANY batch partitioning."""
-    import tempfile
-
     from battetl_spark.analytics.sig_index import SpanIndex
 
-    docs = _t(spark, sf, "documents")
-    idx = SpanIndex.create(
-        spark, tempfile.mkdtemp(prefix="sp_incr_") + "/idx", span_k=SPAN_K
+    idx = SpanIndex.create(spark, _scratch("sp_incr_") + "/idx", span_k=SPAN_K)
+    return _ingest_residues(
+        _t(spark, sf, "documents"), "doc_id", idx.add_batch, order=(1, 2, 0)
     )
-    out = None
-    for i in (1, 2, 0):
-        o = idx.add_batch(docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i))
-        out = o if out is None else out.unionByName(o)
-    return out
 
 
 FREQ_NGRAM_N = 2

@@ -71,3 +71,34 @@ def test_fully_deleted_conversation_leaves_stats_tombstone(spark, tmp_path):
     live = stats.scan().filter("conv_id = 'conv-000000'").count()
     assert live == 0
     assert stats.scan().count() == 2  # other convs intact
+
+
+def test_stats_rebase_after_commit_race(spark, tmp_path):
+    """A stats refresh that loses its commit race to a rival refresh (another
+    epoch, overlapping conversations) rebases onto the rival's commit
+    instead of failing, and the stats equal a full recompute."""
+    base = FX.make_transcripts(seed=24, n_convs=12, max_turns=4)
+    t = LakeTable.create(spark, str(tmp_path / "t3"), TRANSCRIPT_TABLE_SCHEMA,
+                         num_buckets=4, key_cols=KEY_COLS, sort_cols=KEY_COLS)
+    t.append(FX.table_rows_df(spark, base))
+    stats = create_stats_table(spark, str(tmp_path / "s3"), num_buckets=2)
+    convs = t.scan().select("conv_id").distinct()
+    orig = stats.replace_buckets
+    state = {"raced": False}
+
+    def racy(df, buckets, **kw):
+        if not state["raced"]:
+            state["raced"] = True  # set first: the rival refresh re-enters racy
+            refresh_stats(t, stats, convs.limit(6), epoch_id=1)
+        return orig(df, buckets, **kw)
+
+    stats.replace_buckets = racy
+    try:
+        res = refresh_stats(t, stats, convs, epoch_id=2)
+    finally:
+        stats.replace_buckets = orig
+    assert res.applied and res.rebases == 1
+    assert stats.has_fence(1) and stats.has_fence(2)
+    got = stats.scan().orderBy("conv_id").toPandas()[STATS_COLS].reset_index(drop=True)
+    full = conversation_stats(t.scan()).toPandas()[STATS_COLS].reset_index(drop=True)
+    assert_pdf_equal(got, full, ["conv_id"])
