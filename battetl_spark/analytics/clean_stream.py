@@ -71,8 +71,9 @@ maintained via ``merge_apply`` change events), ``meta.json`` (watermark).
 
 Scale shape: per batch — one quality/language projection over batch rows,
 one digest anti-join (index side prunes to (digest, keep_id)), one
-MinHashIndex.add_batch (batch-only signatures + banded join vs the index),
-one fenced merge commit. Nothing rescans corpus text.
+MinHashIndex.ensure_indexed (batch-only signatures appended) plus one
+pairs_involving (banded join of the batch's ids vs the index), one fenced
+merge commit. Nothing rescans corpus text.
 """
 
 from __future__ import annotations

@@ -36,6 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# rounds are O(log^2 n); the loop stops on its self-certifying condition
+# long before this, and raises rather than return an unconverged labeling
+_MAX_ROUNDS = 50
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of each node u to
@@ -71,7 +75,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """Label every node of the undirected ``edges`` graph with the minimum
     node id reachable from it.
@@ -106,7 +109,7 @@ def connected_components(
     e = ed.filter(F.col("u") != F.col("v")).distinct()
 
     done = e.isEmpty()
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         if done:
             break
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
@@ -131,7 +134,7 @@ def connected_components(
     else:
         if not done:
             raise RuntimeError(
-                f"connected_components did not converge in {max_rounds} rounds"
+                f"connected_components did not converge in {_MAX_ROUNDS} rounds"
             )
 
     # stars: members on the u side each point at their component root; roots

@@ -53,6 +53,44 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _staged(df: DataFrame, id_col: str, vec_col: str, *keep: str,
+            side: str = "v") -> DataFrame:
+    """``(id, *keep, __v, __nv)`` — or ``(id, __qv, __nq)`` for the query
+    ``side="q"`` — with the vector cast to array<double> and its norm staged
+    beside it. Norms are per-VECTOR quantities: staged once per side instead
+    of re-folding both norms inside every (query, vector) pair — 1 fold per
+    pair instead of 3, arithmetic (and therefore every rounded output)
+    bit-identical."""
+    v, n = ("__qv", "__nq") if side == "q" else ("__v", "__nv")
+    return df.select(
+        F.col(id_col), *keep, F.col(vec_col).cast("array<double>").alias(v)
+    ).withColumn(n, _norm(F.col(v)))
+
+
+def _top_k(pairs: DataFrame, k: int, id_col: str,
+           query_id_col: str) -> DataFrame:
+    """The exact re-rank every top-k operator shares: over candidate
+    ``pairs`` carrying both staged sides, drop self-matches, emit the
+    rounded cosine and keep the ``k`` best per query ((cos_sim desc, id)
+    order — the rank filter pushes down as a WindowGroupLimit)."""
+    sim = pairs.filter(F.col(id_col) != F.col(query_id_col)).select(
+        query_id_col,
+        id_col,
+        F.round(
+            _dot(F.col("__v"), F.col("__qv")) / (F.col("__nv") * F.col("__nq")),
+            6,
+        ).alias("cos_sim"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cos_sim").desc(), F.col(id_col)
+    )
+    return (
+        sim.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, "cos_sim", "rank")
+    )
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -63,37 +101,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query. ``queries`` must be broadcast-small
     (the usual ANN regime: few queries, huge corpus)."""
-    # norms are per-VECTOR quantities: stage them once per side instead of
-    # re-folding both norms inside every (query, vector) pair — 1 fold per
-    # pair instead of 3, arithmetic (and therefore every rounded output)
-    # bit-identical
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    ).withColumn("__nq", _norm(F.col("__qv")))
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).withColumn("__nv", _norm(F.col("__v")))
-    sim = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                _dot(F.col("__v"), F.col("__qv"))
-                / (F.col("__nv") * F.col("__nq")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
-    )
+    q = _staged(queries, query_id_col, vec_col, side="q")
+    v = _staged(vectors, id_col, vec_col)
+    return _top_k(v.crossJoin(F.broadcast(q)), k, id_col, query_id_col)
 
 
 QUANT = 1_000_000  # fixed-point scale for order-independent sign decisions
@@ -176,17 +186,11 @@ def ivf_cosine_topk(
     (cells × dim), the probe list broadcasts back, and the candidate join is
     a broadcast semi-join on the cell id; re-rank work is ~nprobe/cells of
     brute force."""
-    v = vectors.select(
-        F.col(id_col),
-        F.col(label_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumn("__nv", _norm(F.col("__v")))
+    v = _staged(vectors, id_col, vec_col, label_col)
     centroids = v.groupBy(label_col).agg(
         F.array(*[F.round(F.avg(F.col("__v")[i]), 6) for i in range(dim)]).alias("__c")
     )
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
+    q = _staged(queries, query_id_col, vec_col, side="q")
     # probe selection: rank centroids per query (rounded for cross-engine
     # determinism, label tiebreak), keep nprobe
     cw = Window.partitionBy(query_id_col).orderBy(
@@ -202,31 +206,12 @@ def ivf_cosine_topk(
         )
         .withColumn("__cr", F.row_number().over(cw))
         .filter(F.col("__cr") <= nprobe)
-        .select(query_id_col, label_col, "__qv")
-        .withColumn("__nq", _norm(F.col("__qv")))
     )
-    # per-vector norms staged below the join (1 fold per candidate pair
-    # instead of 3; identical arithmetic, see cosine_topk)
-    sim = (
-        v.join(F.broadcast(probes), label_col)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                _dot(F.col("__v"), F.col("__qv"))
-                / (F.col("__nv") * F.col("__nq")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+    # the query norm is staged on the nprobe surviving (query, cell) rows
+    # (q's own __nq goes unused by the ranking; the optimizer prunes it)
+    probes = _staged(probes, query_id_col, "__qv", label_col, side="q")
+    return _top_k(
+        v.join(F.broadcast(probes), label_col), k, id_col, query_id_col
     )
 
 
@@ -419,9 +404,7 @@ def embedding_near_dup_pairs(
             f"probes must be in [0, rows_per_band={rows_per_band}] "
             "(0 = exact buckets, rows_per_band = every 1-flip neighbor)"
         )
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).withColumn("__nv", _norm(F.col("__v")))
+    v = _staged(vectors, id_col, vec_col)
     # signature store: the banded self-join references this frame on both
     # sides — persist (scope-tracked) so the corpus is projected once
     # (N×planes longs, spills if ever large)
@@ -478,9 +461,7 @@ def train_kmeans_cells(
     payload shuffle by the high-cardinality id). The only shuffle per
     iteration is the tiny-key, map-side-combinable groupBy("cell") for the
     new centroids, and only n_cells×dim floats ever reach the driver."""
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    )
+    v = _staged(vectors, id_col, vec_col)
     seeds = (
         v.withColumn("__h", F.xxhash64(id_col))
         .orderBy("__h")
@@ -521,10 +502,7 @@ def assign_cells(
     """(id, cell) assignment against trained centroids — map-only per-row
     argmin over literal centroid arrays; ZERO shuffle (plan-pinned by
     test_kmeans_assignment_map_only)."""
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    )
-    return v.select(
+    return _staged(vectors, id_col, vec_col).select(
         F.col(id_col), _nearest_cell_expr(F.col("__v"), centroids).alias("cell")
     )
 
@@ -536,15 +514,15 @@ def kmeans_ivf_topk(
     k: int = 5,
     nprobe: int = 2,
     n_cells: int = 8,
-    iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """IVF ANN with a self-trained k-means coarse quantizer: train cells,
-    attach assignments as the label column, and run the probed exact
-    re-rank. (Iterative trainer → pytest-verified, no SQL oracle.)"""
-    centroids = train_kmeans_cells(vectors, dim, n_cells, iters, id_col, vec_col)
+    """IVF ANN with a self-trained k-means coarse quantizer: train cells
+    (3 Lloyd iterations), attach assignments as the label column, and run
+    the probed exact re-rank. (Iterative trainer → pytest-verified, no SQL
+    oracle.)"""
+    centroids = train_kmeans_cells(vectors, dim, n_cells, 3, id_col, vec_col)
     cells = assign_cells(vectors, centroids, id_col, vec_col)
     labeled = vectors.join(cells, id_col).withColumnRenamed("cell", "__cell")
     return ivf_cosine_topk(
@@ -567,39 +545,10 @@ def lsh_cosine_topk(
     """Approximate top-k: candidates share the query's LSH bucket, exact
     cosine re-rank inside the bucket. Recall grows with fewer planes /
     multi-probe; bucket join replaces the cross join at scale."""
-    v = vectors.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumns({
-        "bucket": lsh_bucket(F.col("__v"), dim, num_planes),
-        "__nv": _norm(F.col("__v")),
-    })
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    ).withColumns({
-        "bucket": lsh_bucket(F.col("__qv"), dim, num_planes),
-        "__nq": _norm(F.col("__qv")),
-    })
-    # norms staged below the bucket join — see cosine_topk
-    sim = (
-        v.join(F.broadcast(q), "bucket")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                _dot(F.col("__v"), F.col("__qv"))
-                / (F.col("__nv") * F.col("__nq")),
-                6,
-            ).alias("cos_sim"),
-        )
+    v = _staged(vectors, id_col, vec_col).withColumn(
+        "bucket", lsh_bucket(F.col("__v"), dim, num_planes)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
+    q = _staged(queries, query_id_col, vec_col, side="q").withColumn(
+        "bucket", lsh_bucket(F.col("__qv"), dim, num_planes)
     )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
-    )
+    return _top_k(v.join(F.broadcast(q), "bucket"), k, id_col, query_id_col)

@@ -23,9 +23,9 @@ Scale design notes (these run over O(10^9) docs):
   bytes and dominated the benchmark).
 - MinHash+LSH: shingle-hash → K permuted min-hashes in ONE explode+groupBy
   (map-side combinable); candidate pairs come from a self-join on shared
-  minhash values requiring >= min_band_matches agreements — the join key is
-  tiny and uniformly distributed, so the shuffle is balanced; only candidate
-  pairs (a vanishing fraction of the cross product) are exact-verified.
+  band hashes, deduplicated per pair — the join key is tiny and uniformly
+  distributed, so the shuffle is balanced; only candidate pairs (a
+  vanishing fraction of the cross product) are exact-verified.
 - SimHash: 64-bit signature computed entirely in Catalyst — explode tokens,
   md5 → 16 hex-digit values, 64 conditional bit-vote sums in one groupBy
   (map-side combinable; no Python anywhere). Near-dup candidates use the
@@ -511,31 +511,23 @@ def _smaller_id_pairs(
 
 
 def _banded_candidates(
-    sigs: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    rows_per_band,
-    min_band_matches: int,
+    sigs: DataFrame, id_col: str, num_hashes: int, rows_per_band
 ) -> DataFrame:
-    """Candidate (id_a, id_b) pairs sharing >= min_band_matches LSH bands.
+    """Candidate (id_a, id_b) pairs sharing at least one LSH band.
 
     rows_per_band is the collision-control knob: a band matches a random
     pair with prob J^r, so r=2 squares away the moderate-J background that
     a raw single-hash join drowns in (measured 5× blowup on the bench corpus
     where common shingles give random pairs J≈0.05); ``"auto"`` escalates r
     under candidate pressure (see ``_auto_rows_per_band``). One explode +
-    one self-join on (band, band_hash) + one count — balanced keys, no
-    cross product."""
+    one self-join on (band, band_hash) + one pair dedupe — balanced keys,
+    no cross product."""
     if rows_per_band == "auto":
         _, banded = _auto_rows_per_band(sigs, id_col, num_hashes)
     else:
         banded = _banded(sigs, id_col, num_hashes, int(rows_per_band))
-    return (
-        _smaller_id_pairs(banded, banded, ["band", "bh"], id_col)
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__n_shared"))
-        .filter(F.col("__n_shared") >= min_band_matches)
-        .select("id_a", "id_b")
+    return _smaller_id_pairs(banded, banded, ["band", "bh"], id_col).dropDuplicates(
+        ["id_a", "id_b"]
     )
 
 
@@ -547,7 +539,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     jaccard_threshold: float = 0.6,
     rows_per_band="auto",
-    min_band_matches: int = 1,
     verify: str = "exact",
 ) -> DataFrame:
     """Near-dup pairs via banded minhash-LSH candidate generation.
@@ -578,9 +569,7 @@ def minhash_lsh_pairs(
     # or every side re-explodes + re-minhashes the shingles (K aggregates
     # over the full token stream). N×(id, K longs).
     sigs = _track(minhash_signatures_from_shingles(with_sh, id_col, num_hashes))
-    cand = _banded_candidates(
-        sigs, id_col, num_hashes, rows_per_band, min_band_matches
-    )
+    cand = _banded_candidates(sigs, id_col, num_hashes, rows_per_band)
     if verify == "estimate":
         sig_a = sigs.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("mh_a"))
         sig_b = sigs.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("mh_b"))
@@ -715,7 +704,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Eval-set decontamination: flag every training document sharing at
     least one k-word shingle with any document of ``eval_docs``.
@@ -725,21 +713,16 @@ def decontaminate(
     set is ``docs`` anti-joined on the result, see ``decontaminated``).
 
     Scale shape: eval sets (benchmarks) are tiny next to a 100-TB corpus,
-    so the distinct eval shingle set broadcasts (``broadcast_eval``) and
-    the corpus-side pass is MAP-SIDE explode + broadcast-hash semi-probe +
-    one partial-aggregated count — the corpus never shuffles rows, only
-    (id, count) partials. With ``broadcast_eval=False`` it degrades to a
-    bucketed shuffle join on the shingle hash. Shingle hashes are the same
+    so the distinct eval shingle set always broadcasts and the corpus-side
+    pass is MAP-SIDE explode + broadcast-hash semi-probe + one
+    partial-aggregated count — the corpus never shuffles rows, only
+    (id, count) partials. Shingle hashes are the same
     xxhash64 word tuples the near-dup family uses, so set membership is
     isomorphic to string shingles (what the DuckDB oracle computes).
     """
-    ev = (
-        exploded_shingles(eval_docs, k, id_col, text_col)
-        .select("g")
-        .distinct()
+    ev = F.broadcast(
+        exploded_shingles(eval_docs, k, id_col, text_col).select("g").distinct()
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     tr = exploded_shingles(docs, k, id_col, text_col)
     # per-doc shingles and ev are both distinct → count(*) = distinct shared
     return tr.join(ev, "g").groupBy(id_col).agg(
@@ -753,10 +736,9 @@ def decontaminated(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """The clean training set: ``docs`` minus every contaminated document."""
-    hits = decontaminate(docs, eval_docs, id_col, text_col, k, broadcast_eval)
+    hits = decontaminate(docs, eval_docs, id_col, text_col, k)
     return docs.join(hits.select(id_col), id_col, "left_anti")
 
 
@@ -891,16 +873,6 @@ def simhash_signatures(
         f"`{id_col}`",
         f"CAST({half_sql(range(32, 64))} AS BIGINT) AS sig_hi",
         f"CAST({half_sql(range(0, 32))} AS BIGINT) AS sig_lo",
-    )
-
-
-def simhash(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
-    """Single-column 64-bit signature (hi<<32 | lo), for callers that want
-    one value; may be negative when bit 63 is set."""
-    sig = simhash_signatures(docs, id_col, text_col)
-    return sig.select(
-        F.col(id_col),
-        (F.shiftleft("sig_hi", 32).bitwiseOR(F.col("sig_lo"))).alias("simhash"),
     )
 
 

@@ -12,6 +12,7 @@ broadcast-semi-join J2 pattern.
 from __future__ import annotations
 
 import configparser
+import os
 import xml.etree.ElementTree as ET
 
 
@@ -21,8 +22,10 @@ class ScheduleError(Exception):
 
 def procedure_from_xml(path: str) -> dict:
     """Maccor-style procedure XML → nested dict (S6 analog).
-    Expected shape: <Procedure><Step><StepType>...</StepType>...</Step>...</Procedure>"""
-    root = ET.parse(path).getroot()
+    Expected shape: <Procedure><Step><StepType>...</StepType>...</Step>...</Procedure>
+    A stdlib walker stands in for xmltodict (the CAN scan reuses it):
+    ``{root tag: ...}``, leaves become their stripped text, repeated tags a
+    list."""
 
     def to_dict(el):
         children = list(el)
@@ -39,23 +42,28 @@ def procedure_from_xml(path: str) -> dict:
                 out[c.tag] = v
         return out
 
+    root = ET.parse(path).getroot()
     return {root.tag: to_dict(root)}
+
+
+def _ini_sections(path: str, encoding: str) -> dict[str, dict]:
+    """INI file → ``{section: {key: value}}`` — lenient (duplicate keys and
+    ``%`` are literal, as cycler software writes them)."""
+    cp = configparser.ConfigParser(strict=False, interpolation=None)
+    with open(path, encoding=encoding) as f:
+        cp.read_string(f.read())
+    return {s: dict(cp.items(s)) for s in cp.sections()}
 
 
 def schedule_from_ini(path: str) -> dict:
     """Arbin-style INI schedule → nested dict (S9/S10 analog)."""
-    cp = configparser.ConfigParser(strict=False, interpolation=None)
-    with open(path, encoding="latin-1") as f:
-        cp.read_string(f.read())
-    return {s: dict(cp.items(s)) for s in cp.sections()}
+    return _ini_sections(path, "latin-1")
 
 
 def raw_string_from_file(path: str) -> dict[str, str]:
     """Raw-string scan for waveform/simulation files (.mwf and friends) —
     {file name: contents} (S8 analog, reference Extractor.py:297-315, 571-585:
     fastwave/simulation files carry arbitrary text kept verbatim)."""
-    import os
-
     with open(path, encoding="latin-1") as f:
         return {os.path.basename(path): f.read()}
 
@@ -63,38 +71,13 @@ def raw_string_from_file(path: str) -> dict[str, str]:
 def ini_dict_from_file(path: str, encoding: str = "utf-8") -> dict[str, dict]:
     """INI aux scan → {file name: {section: {key: value}}} (S10 analog,
     reference Extractor.py:482-545: .to object / .fm formula / .fra files)."""
-    import configparser
-    import os
-
-    cp = configparser.ConfigParser(strict=False, interpolation=None)
-    with open(path, encoding=encoding) as f:
-        cp.read_string(f.read())
-    return {os.path.basename(path): {s: dict(cp.items(s)) for s in cp.sections()}}
+    return {os.path.basename(path): _ini_sections(path, encoding)}
 
 
 def can_xml_from_file(path: str) -> dict[str, dict]:
     """CAN BMS XML scan → {file name: nested dict} (S10 analog, reference
-    Extractor.py:503-522 — xmltodict replaced by the stdlib walker above)."""
-    import os
-
-    root = ET.parse(path).getroot()
-
-    def to_dict(el):
-        children = list(el)
-        if not children:
-            return el.text.strip() if el.text else ""
-        out: dict = {}
-        for c in children:
-            v = to_dict(c)
-            if c.tag in out:
-                if not isinstance(out[c.tag], list):
-                    out[c.tag] = [out[c.tag]]
-                out[c.tag].append(v)
-            else:
-                out[c.tag] = v
-        return out
-
-    return {os.path.basename(path): {root.tag: to_dict(root)}}
+    Extractor.py:503-522 — the procedure walker, keyed by file name)."""
+    return {os.path.basename(path): procedure_from_xml(path)}
 
 
 # extension → reader for schedule-adjacent aux files (per-extension dispatch
@@ -113,8 +96,6 @@ AUX_READERS = {
 def aux_from_files(paths: list[str]) -> dict[str, object]:
     """Scan every recognized aux file (by extension) into one merged dict;
     unrecognized extensions are ignored (they may be the main schedule)."""
-    import os
-
     out: dict[str, object] = {}
     for p in paths:
         ext = os.path.splitext(p)[1].lower()

@@ -52,6 +52,15 @@ _VALUE_SCHEMA = T.StructType(
 )
 
 
+def _lsn(n_partitions: int):
+    """``lsn = offset * P + partition`` — the one total order both the Kafka
+    adapter and ``FilePartitionedLog`` assign."""
+    return (
+        F.col("offset").cast("long") * int(n_partitions)
+        + F.col("partition").cast("long")
+    ).alias("lsn")
+
+
 def kafka_to_change_events(
     frame: DataFrame, n_partitions: int, malformed: str = "fail"
 ) -> DataFrame:
@@ -90,8 +99,7 @@ def kafka_to_change_events(
     opts = {"mode": "FAILFAST"} if malformed == "fail" else {}
     payload = F.from_json(F.col("value").cast("string"), _VALUE_SCHEMA, opts)
     out = frame.select(
-        (F.col("offset").cast("long") * int(n_partitions)
-         + F.col("partition").cast("long")).alias("lsn"),
+        _lsn(n_partitions),
         *[payload[f.name].alias(f.name) for f in _VALUE_SCHEMA.fields],
         F.col("partition").cast("int").alias("source_partition"),
         F.col("value").cast("string").alias("__raw"),
@@ -188,10 +196,10 @@ class FilePartitionedLog:
         return self.meta()["n_partitions"]
 
     # ---------------------------------------------------------------- write
-    def publish(self, events: DataFrame, seq_col: str = "lsn") -> dict:
+    def publish(self, events: DataFrame) -> dict:
         """Append one segment: route each event to partition
         ``pmod(xxhash64(key), P)`` (keyed-producer contract — one key, one
-        partition) and assign monotone per-partition offsets in ``seq_col``
+        partition) and assign monotone per-partition offsets in ``lsn``
         order (key/op tiebreak → deterministic even for same-seq inputs),
         continuing from the log's high-water offsets. Returns per-partition
         appended counts.
@@ -224,9 +232,9 @@ class FilePartitionedLog:
         )
         tie = [
             c for c in (meta["key_col"], "turn_idx", "op")
-            if c in events.columns and c != seq_col
+            if c in events.columns
         ]
-        w = Window.partitionBy("__part").orderBy(F.col(seq_col), *map(F.col, tie))
+        w = Window.partitionBy("__part").orderBy(F.col("lsn"), *map(F.col, tie))
         seg = (
             events.withColumn("__part", part)
             .withColumn(
@@ -316,7 +324,7 @@ class FilePartitionedLog:
     # ----------------------------------------------------------------- read
     def _with_lsn(self, df: DataFrame, p_count: int) -> DataFrame:
         return df.select(
-            (F.col("offset") * p_count + F.col("partition")).alias("lsn"),
+            _lsn(p_count),
             *_PAYLOAD_COLS,
             F.col("partition").alias("source_partition"),
         )
@@ -337,8 +345,6 @@ class FilePartitionedLog:
 
     def read_all(self) -> DataFrame:
         """The whole log as one batch DataFrame (replay-equivalence tests)."""
-        import glob as _glob
-
         p_count = self.n_partitions
         paths = sorted(_glob.glob(os.path.join(self._data, "seg-*")))
         if not paths:

@@ -233,7 +233,6 @@ def normalize_cycler_data(
     df: DataFrame,
     timezone: str = DEFAULT_TIMEZONE,
     file_meta: dict | None = None,
-    keep_extra_as_json: bool = True,
 ) -> DataFrame:
     """Vendor frame → canonical frame, as a single Catalyst ``select``.
 
@@ -327,7 +326,7 @@ def normalize_cycler_data(
         for c in src_cols
         if c not in consumed and not _norm(c).startswith("unnamed")
     ]
-    if keep_extra_as_json and extras:
+    if extras:
         exprs.append(pack_other_details(extras).alias("other_details"))
 
     out = df.select(*exprs)

@@ -155,6 +155,9 @@ def test_textops_plan_shapes(spark):
     p = plan(E.q_ann_ivf_topk(spark, SF))
     assert "WindowGroupLimit" in p     # top-k pushed below the rank filter
     assert "partial_avg" in p          # centroids combine map-side
+    # the shared re-rank keeps the rank-limit pushdown for every top-k path
+    for q in (E.q_ann_cosine_topk, E.q_ann_lsh_topk):
+        assert "WindowGroupLimit" in plan(q(spark, SF))
 
 
 def test_retention_broadcast_sizes_no_raw_window(spark):

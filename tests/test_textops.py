@@ -72,6 +72,9 @@ def test_minhash_lsh_finds_planted_near_dups(spark, docs):
     pairs = TX.minhash_lsh_pairs(corpus, jaccard_threshold=0.5)
     hits = pairs.filter("id_b - id_a = 500000").count()
     assert hits >= 4  # minhash is probabilistic; ≥4/5 at j≈0.95
+    # planted copies share many bands: each candidate pair is emitted once
+    keys = pairs.select("id_a", "id_b").collect()
+    assert len(keys) == len(set(keys))
 
 
 def test_cache_scope_releases_operator_persists(spark, docs):

@@ -9,9 +9,16 @@ numbers drift.
 Usage:
   python tools/bench_ab.py 'conf1=val1,conf2=val2' q1 q2 ...
   python tools/bench_ab.py '' q1 q2 ...           # A vs A: plain timing + noise floor
-  python tools/bench_ab.py --plans SPEC q1 ...    # also write A's plan to plans/r06/<q>_<tag>.txt
+  python tools/bench_ab.py --plans SPEC q1 ...    # also write A's plans to plans/r06/<q>_<tag>.*
   python tools/bench_ab.py --noop SPEC q1 ...     # noop-sink action instead of count()
   REPS=3 SPARK_GRAFT_SF_DIR=/tmp/sf1 PLAN_TAG=after python tools/bench_ab.py ...
+  REPS=0 PLAN_TAG=x python tools/bench_ab.py --plans '' q1 ...   # plans only
+
+``--plans`` writes A's formatted physical plan to ``<q>_<tag>.txt`` and its
+optimized logical plan to ``<q>_<tag>.optimized.txt``, both with the
+run-specific noise (expression ids, lambda variable numbers, plan ids,
+query-stage ids, temp-dir paths) normalized away — so plan identity between two checkouts is a plain
+``diff -r`` of their ``plans/r06`` directories.
 
 A = session defaults; B = the given conf overrides (restored after each B
 rep). Prints per-rep samples and the median A/B per query. ``--noop`` runs
@@ -23,11 +30,42 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_PLAN_NOISE = [
+    (re.compile(r"#\d+L?"), "#x"),
+    (re.compile(r"(lambda [A-Za-z]\w*?)_\d+"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=x"),
+    (re.compile(r"QueryStage \d+"), "QueryStage x"),
+    # formatted mode prints a query stage's id as its Arguments line
+    (re.compile(r"(QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: )\d+"),
+     r"\1x"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)]+"), "<tmp>"),
+]
+
+
+def normalized_plan(text: str) -> str:
+    for pat, rep in _PLAN_NOISE:
+        text = pat.sub(rep, text)
+    return text
+
+
+def write_plans(df, name: str, tag: str) -> None:
+    qe = df._jdf.queryExecution()
+    plans = {
+        "txt": df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"),
+        "optimized.txt": qe.optimizedPlan().toString(),
+    }
+    os.makedirs("plans/r06", exist_ok=True)
+    for ext, text in plans.items():
+        with open(f"plans/r06/{name}_{tag}.{ext}", "w") as f:
+            f.write(normalized_plan(text))
 
 
 def main():
@@ -75,13 +113,11 @@ def main():
     results = {}
     for name in names:
         if "--plans" in flags:
-            # A's plan (session defaults), tagged by PLAN_TAG
-            os.makedirs("plans/r06", exist_ok=True)
-            df = qs[name](spark, sf_dir)
-            with open(f"plans/r06/{name}_{tag}.txt", "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
+            # A's plans (session defaults), tagged by PLAN_TAG
+            write_plans(qs[name](spark, sf_dir), name, tag)
             spark.catalog.clearCache()
+        if not reps:
+            continue
         a_samples, b_samples = [], []
         # warm both variants once (JIT) before timing
         for active in (False, True):
