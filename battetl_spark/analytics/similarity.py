@@ -49,10 +49,6 @@ def _norm(a):
     )
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _staged(df: DataFrame, id_col: str, vec_col: str, *keep: str,
             side: str = "v") -> DataFrame:
     """``(id, *keep, __v, __nv)`` — or ``(id, __qv, __nq)`` for the query
@@ -189,10 +185,11 @@ def ivf_cosine_topk(
     v = _staged(vectors, id_col, vec_col, label_col)
     centroids = v.groupBy(label_col).agg(
         F.array(*[F.round(F.avg(F.col("__v")[i]), 6) for i in range(dim)]).alias("__c")
-    )
+    ).withColumn("__nc", _norm(F.col("__c")))
     q = _staged(queries, query_id_col, vec_col, side="q")
-    # probe selection: rank centroids per query (rounded for cross-engine
-    # determinism, label tiebreak), keep nprobe
+    # probe selection: rank centroids per query by cosine over the staged
+    # norms (rounded for cross-engine determinism, label tiebreak), keep
+    # nprobe; the probes carry the query's __nq on to the re-rank
     cw = Window.partitionBy(query_id_col).orderBy(
         F.col("__csim").desc(), F.col(label_col)
     )
@@ -202,14 +199,15 @@ def ivf_cosine_topk(
             query_id_col,
             label_col,
             "__qv",
-            F.round(cosine(F.col("__qv"), F.col("__c")), 9).alias("__csim"),
+            "__nq",
+            F.round(
+                _dot(F.col("__qv"), F.col("__c")) / (F.col("__nq") * F.col("__nc")),
+                9,
+            ).alias("__csim"),
         )
         .withColumn("__cr", F.row_number().over(cw))
         .filter(F.col("__cr") <= nprobe)
     )
-    # the query norm is staged on the nprobe surviving (query, cell) rows
-    # (q's own __nq goes unused by the ranking; the optimizer prunes it)
-    probes = _staged(probes, query_id_col, "__qv", label_col, side="q")
     return _top_k(
         v.join(F.broadcast(probes), label_col), k, id_col, query_id_col
     )

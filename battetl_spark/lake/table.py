@@ -6,10 +6,13 @@ lakehouse ideas — snapshot isolation via an atomically-swapped metadata
 pointer, immutable data files, copy-on-write row rewrite, schema evolution by
 metadata, O(1) commit):
 
-- **Snapshots**: JSON files ``metadata/v{N:08d}.json`` created with exclusive
-  ``open(..., 'x')`` (optimistic concurrency — a losing writer retries), then
-  ``version-hint.txt`` swapped via ``os.replace`` (atomic on POSIX). Readers
-  see either the old or the new snapshot, never a torn state.
+- **Snapshots**: JSON roots ``metadata/v{N:08d}.json``, each written whole
+  under a temp name and published with ``os.link`` — the link IS the commit
+  (it fails when ``v{N}`` exists: optimistic concurrency, the losing writer
+  retries), so no reader ever sees a torn root. ``version-hint.txt`` is
+  swapped afterwards via ``os.replace`` but is only a hint: readers roll
+  forward from it while ``v{N+1}`` exists, so a writer that dies between
+  the link and the swap neither loses its commit nor wedges the table.
 - **Bucketed layout**: rows are hash-bucketed on a bucket key (``conv_id``)
   into ``num_buckets`` buckets. MERGE rewrites only the buckets a batch
   touches (copy-on-write); untouched buckets' files are carried forward by
@@ -63,6 +66,8 @@ DELETED_COL = "_deleted"    # defined here too to avoid a circular import)
 _HINT = "version-hint.txt"
 # version collisions ``LakeTable.commit`` retries before raising CommitConflict
 _COMMIT_RETRIES = 10
+# key-salt split of the hot write: a bucket writes to at most this many files
+_SALTS = 4
 
 # ---------------------------------------------------------------- zone maps
 # Per-file min/max column statistics ("zone maps") harvested from the parquet
@@ -347,17 +352,36 @@ class LakeTable:
     # mutate them in place — ``commit`` deepcopies before ``mutate`` for
     # exactly this reason.
     def snapshot(self) -> dict:
+        """The current snapshot. The hint only says where to start looking:
+        roll forward while the next root exists (its writer may have died
+        before swapping the hint), or fall back to the newest retained root
+        when the hinted one has been vacuumed."""
         with open(os.path.join(self._meta_dir, _HINT)) as f:
-            return self._open(int(f.read().strip()))
+            v = int(f.read().strip())
+        if not os.path.exists(self._root(v)):
+            v = self._versions()[-1]
+        while os.path.exists(self._root(v + 1)):
+            v += 1
+        return self._open(v)
+
+    def _root(self, version: int) -> str:
+        return os.path.join(self._meta_dir, f"v{version:08d}.json")
+
+    def _versions(self) -> list[int]:
+        """Retained snapshot versions, oldest first."""
+        return sorted(
+            int(os.path.basename(p)[1:-5])
+            for p in glob.glob(os.path.join(self._meta_dir, "v*.json"))
+        )
 
     def _open(self, version: int) -> dict:
-        with open(os.path.join(self._meta_dir, f"v{version:08d}.json")) as f:
+        with open(self._root(version)) as f:
             return self._hydrate(json.load(f))
 
     def _roots(self):
         """Retained snapshot roots as stored (not hydrated), oldest first."""
-        for p in sorted(glob.glob(os.path.join(self._meta_dir, "v*.json"))):
-            with open(p) as f:
+        for v in self._versions():
+            with open(self._root(v)) as f:
                 yield json.load(f)
 
     def _read_manifest(self, rel: str, written: dict | None = None) -> dict:
@@ -410,9 +434,15 @@ class LakeTable:
             inv.setdefault(mp, []).append(int(b))
         root = {k: v for k, v in snap.items() if k not in ("files", "manifests")}
         root["manifests_inv"] = {mp: sorted(bs) for mp, bs in inv.items()}
-        p = os.path.join(self._meta_dir, f"v{snap['version']:08d}.json")
-        with open(p, "x") as f:  # exclusive create = optimistic lock
-            json.dump(root, f)
+        tmp = os.path.join(self._meta_dir, f".root.{uuid.uuid4().hex}")
+        try:
+            with open(tmp, "w") as f:
+                json.dump(root, f)
+            # the commit point: publish the whole root, or FileExistsError
+            # when another writer took this version first
+            os.link(tmp, self._root(snap["version"]))
+        finally:
+            os.remove(tmp)
         tmp = os.path.join(self._meta_dir, f".hint.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(str(snap["version"]))
@@ -772,14 +802,7 @@ class LakeTable:
 
     # ----------------------------------------------------------------- write
     def _write_data(
-        self,
-        df: DataFrame,
-        target_partitions: int | None = None,
-        files_per_bucket: int = 4,
-        shuffle: bool = True,
-        cluster_by: str | None = None,
-        cluster_sort: list | None = None,
-        max_records_per_file: int | None = None,
+        self, df: DataFrame, shuffle: bool = True, rewrite: tuple | None = None
     ) -> dict[str, list[str]]:
         """Write rows (must carry BUCKET_COL) into a fresh commit dir,
         one hive-style subdir per bucket; returns {bucket: [rel paths]}.
@@ -787,12 +810,14 @@ class LakeTable:
         sortWithinPartitions enforces the stable-ordering invariant
         (per-turn text equality under stable turn ordering) at rest.
 
-        ``cluster_by`` (clustered-compaction path): instead of the key-salt
-        split, each bucket flows through one task sorted by ``cluster_by``
-        and the writer rolls a new file every ``max_records_per_file``
-        records — so a bucket's files hold CONTIGUOUS, DISJOINT cluster_by
-        ranges and its zone maps actually skip (the salt split gives every
-        file the bucket's full value range; see ``compact``).
+        ``rewrite=(tasks, lead_sort, max_records_per_file)`` is compaction's
+        shape: instead of the key-salt split, each bucket flows through ONE
+        of ``tasks`` tasks, sorted by the ``lead_sort`` Columns ahead of the
+        sort columns, and the writer rolls a new file every
+        ``max_records_per_file`` records (None: one file per bucket). A
+        clustering lead makes a bucket's files hold CONTIGUOUS, DISJOINT
+        ranges of the lead, so its zone maps actually skip (the salt split
+        gives every file the bucket's full value range; see ``compact``).
         """
         snap = self.snapshot()
         sort_cols = snap["sort_cols"] or []
@@ -805,30 +830,16 @@ class LakeTable:
         # child, executing the whole upstream merge pipeline twice; measured
         # 17% slower). Hash by bucket alone idles ~40% of cores (collisions);
         # hash by (bucket, full key) writes n_out × B tiny files.
-        lead_sort: list = []  # Column exprs sorted ahead of sort_cols
-        if cluster_by or cluster_sort:
-            # clustered / Z-ordered compaction: one task per bucket sorted
-            # by the cluster key (a plain column, or a Morton expression —
-            # ``cluster_sort`` — that never materializes into the file)
-            n_out = target_partitions or max(
-                1, df.sparkSession.sparkContext.defaultParallelism * 2
-            )
-            w = df.repartition(n_out, F.col(BUCKET_COL))
-            if cluster_sort:
-                lead_sort = list(cluster_sort)
-            else:
-                sort_cols = [cluster_by] + [c for c in sort_cols if c != cluster_by]
+        tasks, lead_sort, per_file = rewrite or (None, [], None)
+        if rewrite:
+            w = df.repartition(tasks, F.col(BUCKET_COL))
         elif shuffle:
-            n_out = target_partitions or max(
-                1, df.sparkSession.sparkContext.defaultParallelism * 2
-            )
+            n_out = max(1, df.sparkSession.sparkContext.defaultParallelism * 2)
             lead = (sort_cols or [BUCKET_COL])[0]
             # seeded independently of bucket_expr: pmod(xxhash64(key), B) and
             # pmod(xxhash64(key), S) are correlated when S divides B (the salt
             # would collapse to bucket % S and never split a bucket)
-            salt = F.pmod(
-                F.xxhash64(F.col(lead), F.lit(0x5A17)), F.lit(max(1, files_per_bucket))
-            )
+            salt = F.pmod(F.xxhash64(F.col(lead), F.lit(0x5A17)), F.lit(_SALTS))
             w = df.repartition(n_out, F.col(BUCKET_COL), salt)
         else:
             # caller guarantees rows are already usefully partitioned (e.g.
@@ -838,8 +849,8 @@ class LakeTable:
         if sort_cols or lead_sort:
             w = w.sortWithinPartitions(BUCKET_COL, *lead_sort, *sort_cols)
         writer = w.write.partitionBy(BUCKET_COL).mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        if per_file:
+            writer = writer.option("maxRecordsPerFile", int(per_file))
         writer.parquet(out)
         stat_cols = self._stats_cols(snap, df.columns)
         paths = glob.glob(os.path.join(out, f"{BUCKET_COL}=*", "*.parquet"))
@@ -876,12 +887,8 @@ class LakeTable:
         buckets: list[int],
         fence: dict | None = None,
         lineage: list[dict] | None = None,
-        target_partitions: int | None = None,
-        files_per_bucket: int = 4,
         base_snapshot: dict | None = None,
-        cluster_by: str | None = None,
-        cluster_sort: list | None = None,
-        max_records_per_file: int | None = None,
+        rewrite: tuple | None = None,
     ) -> dict | None:
         """Copy-on-write commit: the given buckets' contents become exactly
         ``df`` (which must carry BUCKET_COL); all other buckets carry over.
@@ -898,17 +905,13 @@ class LakeTable:
         schema_id (a concurrent evolve_schema must not re-tag them — old
         files are harmonized on read, never relabeled).
 
+        ``rewrite`` is compaction's file layout (see ``_write_data``); the
+        default is the hot salted write.
+
         Returns None (no commit) when ``fence``'s epoch is already applied —
         exactly-once replay no-op; callers must treat it as not-applied.
         """
-        new_files = self._write_data(
-            df,
-            target_partitions,
-            files_per_bucket,
-            cluster_by=cluster_by,
-            cluster_sort=cluster_sort,
-            max_records_per_file=max_records_per_file,
-        )
+        new_files = self._write_data(df, rewrite=rewrite)
 
         replaced = {int(b) for b in buckets}
         sid = (base_snapshot or self.snapshot())["current_schema_id"]
@@ -1054,7 +1057,7 @@ class LakeTable:
             if version not in tags:
                 raise ValueError(f"tag {version!r} does not exist")
             version = int(tags[version])
-        if not os.path.exists(os.path.join(self._meta_dir, f"v{version:08d}.json")):
+        if not os.path.exists(self._root(version)):
             raise ValueError(f"snapshot version {version} does not exist")
         return self._open(version)
 
@@ -1080,8 +1083,7 @@ class LakeTable:
 
         def mutate(snap):
             v = snap["version"] if version is None else int(version)
-            p = os.path.join(self._meta_dir, f"v{v:08d}.json")
-            if version is not None and not os.path.exists(p):
+            if version is not None and not os.path.exists(self._root(v)):
                 raise ValueError(f"snapshot version {v} does not exist")
             tags = dict(snap.get("tags") or {})
             if name in tags and not replace:
@@ -1229,51 +1231,41 @@ class LakeTable:
         cluster_by: str | list[str] | None = None,
         files_per_bucket: int = 1,
     ) -> dict | None:
-        """Rewrite buckets whose file count exceeded the threshold into one
-        file each (copy-on-write; snapshot-atomic). Long-running CDC streams
-        accrete one file per bucket per commit — compaction bounds read
+        """Rewrite buckets whose file count reached the threshold
+        (copy-on-write; snapshot-atomic). Long-running CDC streams accrete
+        one file per bucket per commit — compaction bounds read
         amplification. Returns the new snapshot, or None if nothing to do.
+
+        Every compaction is ONE rewrite shape (``_write_data``'s
+        ``rewrite``): each crowded bucket flows through one task, sorted by
+        a lead key ahead of the sort columns. Plain compaction has no lead
+        key and writes one file per bucket.
 
         ``cluster_by``: clustered compaction (Delta OPTIMIZE ZORDER /
         Iceberg sort-compaction analog). The hot write path salt-splits a
         bucket's files by KEY hash, so every file spans the bucket's full
-        ``ts``/sort range and zone maps rarely skip; clustered compaction
-        rewrites each crowded bucket as ``files_per_bucket`` files holding
-        contiguous DISJOINT ``cluster_by`` ranges (one sorted pass per
-        bucket, files split by record-count rollover — no sampling pass).
-        A range-filtered scan of a 100 TB table then opens only the files
-        whose range overlaps instead of every file of every qualifying
-        bucket. ``cluster_by`` is persisted into the ``stats_cols`` table
-        property first, so this and every FUTURE write harvests its
-        min/max.
-
-        A LIST of 2+ columns Z-ORDERS instead (Delta OPTIMIZE ZORDER BY):
-        each crowded bucket is rewritten sorted by the Morton interleave
-        of the columns' quantized ranks (``lake.zorder``), so its files
-        are simultaneously range-tight in EVERY listed dimension and the
-        existing per-column zone maps skip on any of them. Quantization
-        ranges come from one partial-aggregated pass over the rows being
-        rewritten — no sampling, the pipeline executes once."""
-        zorder_cols: list[str] | None = None
-        if isinstance(cluster_by, (list, tuple)):
-            if len(cluster_by) == 1:
-                cluster_by = cluster_by[0]
-            else:
-                zorder_cols = [str(c) for c in cluster_by]
-                cluster_by = None
-        snap = self.snapshot()
-        if zorder_cols:
+        ``ts``/sort range and zone maps rarely skip. A column name leads the
+        sort with that column; a LIST of 2+ columns leads it with the Morton
+        interleave of the columns' quantized ranks (``lake.zorder``, Delta
+        OPTIMIZE ZORDER BY), whose quantization ranges come from one
+        partial-aggregated pass over the rows being rewritten. Either way
+        the writer rolls files by record count, so each crowded bucket
+        becomes ``files_per_bucket`` files holding contiguous DISJOINT
+        ranges of the lead — range-tight in every listed dimension, with no
+        sampling pass. A range-filtered scan of a 100 TB table then opens
+        only the files whose range overlaps. The clustering columns are
+        persisted into the ``stats_cols`` table property first, so this and
+        every FUTURE write harvests their min/max."""
+        cols = [cluster_by] if isinstance(cluster_by, str) else list(cluster_by or [])
+        if len(cols) > 1:
             from battetl_spark.lake.zorder import check_zorderable
 
-            check_zorderable(self.schema, zorder_cols)
-            for c in zorder_cols:
-                self._ensure_stats_col(c)
-            snap = self.snapshot()
-        if cluster_by:
-            if cluster_by not in {f["name"] for f in snap["schema"]["fields"]}:
-                raise ValueError(f"cluster_by column {cluster_by!r} not in schema")
-            self._ensure_stats_col(cluster_by)
-            snap = self.snapshot()
+            check_zorderable(self.schema, cols)
+        elif cols and cols[0] not in self.schema.fieldNames():
+            raise ValueError(f"cluster_by column {cols[0]!r} not in schema")
+        for c in cols:
+            self._ensure_stats_col(c)
+        snap = self.snapshot()
         crowded = [
             int(b) for b, entries in snap["files"].items()
             if len(entries) >= min_files_per_bucket
@@ -1283,40 +1275,23 @@ class LakeTable:
         rows = self.scan(crowded, snap, include_deleted=True).withColumn(
             BUCKET_COL, bucket_expr(snap["bucket_key"], snap["num_buckets"])
         )
-        # unsalted, one partition per bucket → one output file per bucket;
-        # base_snapshot makes a racing merge abort THIS rewrite (CommitConflict)
-        # instead of resurrecting pre-merge rows
-        if not cluster_by and not zorder_cols:
-            return self.replace_buckets(
-                rows, crowded, target_partitions=len(crowded), files_per_bucket=1,
-                base_snapshot=snap,
-            )
-        rows = rows.persist()
+        lead, per_file = [], None
         try:
-            mx = rows.groupBy(BUCKET_COL).count().agg(F.max("count")).first()[0]
-            if mx is None:
-                return None
-            cluster_sort = None
-            if zorder_cols:
-                from battetl_spark.lake.zorder import column_ranges, zorder_key
+            if cols:
+                rows = rows.persist()  # sized and ranged, then written
+                mx = rows.groupBy(BUCKET_COL).count().agg(F.max("count")).first()[0]
+                per_file = -(-int(mx or 1) // max(1, files_per_bucket))
+                lead = [F.col(cols[0])]
+                if len(cols) > 1:
+                    from battetl_spark.lake.zorder import _types, column_ranges, zorder_key
 
-                mins, maxs = column_ranges(rows, zorder_cols)
-                types = [
-                    f.dataType.simpleString()
-                    for c in zorder_cols
-                    for f in rows.schema.fields if f.name == c
-                ]
-                cluster_sort = [
-                    zorder_key(zorder_cols, mins, maxs, types=types)
-                ]
+                    mins, maxs = column_ranges(rows, cols)
+                    lead = [zorder_key(cols, mins, maxs, types=_types(rows.schema, cols))]
+            # base_snapshot makes a racing merge abort THIS rewrite
+            # (CommitConflict) instead of resurrecting pre-merge rows
             return self.replace_buckets(
-                rows,
-                crowded,
-                target_partitions=len(crowded),
-                base_snapshot=snap,
-                cluster_by=cluster_by,
-                cluster_sort=cluster_sort,
-                max_records_per_file=-(-int(mx) // max(1, files_per_bucket)),
+                rows, crowded, base_snapshot=snap,
+                rewrite=(len(crowded), lead, per_file),
             )
         finally:
             rows.unpersist()
@@ -1442,10 +1417,7 @@ class LakeTable:
         data files — so a pinned training dataset survives any vacuum. Safe
         order: metadata first (readers can no longer reach old versions),
         then unreferenced files. Returns deleted file paths."""
-        versions = sorted(
-            int(os.path.basename(p)[1:-5])
-            for p in glob.glob(os.path.join(self._meta_dir, "v*.json"))
-        )
+        versions = self._versions()
         tagged = {
             int(v) for v in (self.snapshot().get("tags") or {}).values()
         }
@@ -1460,7 +1432,7 @@ class LakeTable:
                     live.add(os.path.join(self.path, e["path"]))
         for v in versions:
             if v not in retained:
-                os.remove(os.path.join(self._meta_dir, f"v{v:08d}.json"))
+                os.remove(self._root(v))
         # manifests referenced by no retained root follow their snapshots out
         for p in glob.glob(os.path.join(self._meta_dir, "manifests", "m-*.json")):
             rel = os.path.relpath(p, self._meta_dir)

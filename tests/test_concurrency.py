@@ -5,10 +5,15 @@ retry is NOT a blind re-apply: data computed from a stale scan must abort
 with CommitConflict when its buckets changed underneath, while disjoint
 writers still compose. Also pins the fence-race no-op reporting and the
 NULL-bucket-key behavior (xxhash64(NULL) = seed, a real bucket — never a
-__HIVE_DEFAULT_PARTITION__ row).
+__HIVE_DEFAULT_PARTITION__ row), and that a writer dying at either commit
+boundary (inside the root write, or between the root and the hint swap)
+never wedges the table.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -239,3 +244,48 @@ def test_racing_compaction_vs_merge_never_loses_rows(spark, table):
     assert table.has_fence(77)
     res = merge_apply(table, events, epoch_id=77)
     assert not res.applied
+
+
+@pytest.mark.parametrize("crash", ["in_root_write", "before_hint_swap"])
+def test_crash_at_commit_boundary_never_wedges_table(spark, table, monkeypatch, crash):
+    """The snapshot root is the commit point. A writer that dies while
+    writing the root has committed nothing; one that dies after publishing
+    it but before swapping version-hint.txt has committed. Either way a
+    restarted writer sees exactly the committed state — also after vacuum
+    drops the root a lagging hint names — its next commit lands, and every
+    retained root still parses."""
+    before_version, before_rows = table.snapshot()["version"], table.scan().count()
+    crashed = FX.table_rows_df(spark, FX.make_transcripts(seed=90, n_convs=6, max_turns=3))
+    n_crashed = crashed.count()
+    real_dump, real_replace = json.dump, os.replace
+
+    def torn_root(obj, f, *a, **k):
+        if "manifests_inv" not in obj:  # a manifest: written whole
+            return real_dump(obj, f, *a, **k)
+        f.write(json.dumps(obj)[:16])
+        raise OSError("crash while writing the snapshot root")
+
+    def lost_hint(src, dst):
+        if os.path.basename(dst) == "version-hint.txt":
+            raise OSError("crash before the hint swap")
+        return real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        if crash == "in_root_write":
+            m.setattr(json, "dump", torn_root)
+        else:
+            m.setattr(os, "replace", lost_hint)
+        for _ in range(2):  # twice in a row: a hint can lag two roots
+            with pytest.raises(OSError):
+                table.append(crashed)
+
+    landed = 2 if crash == "before_hint_swap" else 0
+    restarted = LakeTable.load(spark, table.path)
+    assert restarted.snapshot()["version"] == before_version + landed
+    restarted.vacuum_files(keep_snapshots=1)
+    assert restarted.snapshot()["version"] == before_version + landed
+    assert restarted.scan().count() == before_rows + landed * n_crashed
+    restarted.tag("after-crash")  # pins the version it found current
+    assert restarted.snapshot()["version"] == before_version + landed + 1
+    assert restarted.tags() == {"after-crash": before_version + landed}
+    assert [r["version"] for r in restarted._roots()][-1] == before_version + landed + 1

@@ -38,11 +38,18 @@ def state(t):
 
 def test_compact_preserves_state(spark, tmp_path):
     t, expected = build(spark, tmp_path)
-    before_files = sum(len(v) for v in t.snapshot()["files"].values())
+    before = t.snapshot()["files"]
+    before_files = sum(len(v) for v in before.values())
     snap = t.compact(min_files_per_bucket=2)
     assert snap is not None
-    after_files = sum(len(v) for v in t.snapshot()["files"].values())
+    after = t.snapshot()["files"]
+    after_files = sum(len(v) for v in after.values())
     assert after_files < before_files
+    for b, entries in before.items():
+        if len(entries) >= 2:
+            assert len(after[b]) == 1  # a rewritten bucket: one file
+        else:
+            assert after[b] == entries  # an uncrowded bucket: carried over
     assert_pdf_equal(state(t), expected, KEY_COLS)
 
 

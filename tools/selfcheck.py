@@ -3,11 +3,15 @@ a given sf dir (default sf0.01), compare row count, column names, and
 order-insensitive values — a local mirror of the driver's correctness gate.
 
 Usage: python tools/selfcheck.py [sf_dir] [only_query_name]
+
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default 16) with as many shuffle
+partitions, and clears the Spark cache after each builder.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -44,7 +48,9 @@ def canon(df, cols):
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2] if len(sys.argv) > 2 else None
-    spark = get_spark(master="local[16]", shuffle_partitions=16, app_name="selfcheck")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus,
+                      app_name="selfcheck")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
@@ -61,6 +67,9 @@ def main():
             failures.append((name, f"SPARK ERROR: {ex}"))
             print(f"FAIL  {name}: spark error {str(ex)[:200]}")
             continue
+        finally:
+            # a builder's persisted frames must not pile up in the one JVM
+            spark.catalog.clearCache()
         if name not in oracles:
             print(f"rows  {name}: {len(got)} rows (no oracle — rows-only)")
             continue
