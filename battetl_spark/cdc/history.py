@@ -248,6 +248,10 @@ class HistoryTable:
             files_per_bucket=files_per_bucket,
         )
 
+    def compact_fences(self) -> dict | None:
+        """``LakeTable.compact_fences`` on the history table."""
+        return self.table.compact_fences()
+
     def expire_versions(self, before_lsn: int) -> dict | None:
         """Retention GC: drop CLOSED versions whose validity ended at or
         before ``before_lsn`` (``valid_to_lsn <= L``). Open rows and rows

@@ -70,7 +70,7 @@ def check_schema_compatibility(
         widened = _widen(cur.dataType, f.dataType)
         if widened != cur.dataType:
             idx = [i for i, x in enumerate(out) if x.name == f.name][0]
-            out[idx] = T.StructField(f.name, widened, cur.nullable)
+            out[idx] = T.StructField(f.name, widened, cur.nullable, cur.metadata)
     for f in current.fields:
         if f.name.startswith("_"):
             continue

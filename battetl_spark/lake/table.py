@@ -18,9 +18,11 @@ metadata, O(1) commit):
   touches (copy-on-write); untouched buckets' files are carried forward by
   reference. At 100 TB this is what keeps a 1 GB microbatch from rewriting
   the table: cost ∝ touched-bucket bytes, not table bytes.
-- **Schema evolution**: each file group records the schema it was written
-  with; reads harmonize per group (missing columns → NULL, widened types →
-  cast) so old files are never rewritten on ADD COLUMN / type widening.
+- **Schema evolution**: every column has a field id (Iceberg's rule: ids
+  are never reused) and each file group records the schema it was written
+  with; reads harmonize per group by id (the stored column with the same
+  id, cast to the current type; NULL when the group has none), so ADD,
+  DROP, RENAME and type widening never rewrite a file.
   (Reference analog: schema-version gate Loader.py:448-493 and the
   ``other_details`` open-schema escape hatch Loader.py:495-524.)
 - **Fences**: the snapshot embeds a map of applied (epoch_id → max_lsn,
@@ -249,13 +251,22 @@ def _add_entries(snap: dict, new_files: dict[str, list[dict]], **tags) -> None:
         snap["files"][b] = snap["files"].get(b, []) + [{**e, **tags} for e in entries]
 
 
-def _push_schema(snap: dict, struct: T.StructType) -> str:
-    """Record ``struct`` as a new schema id and make it current."""
-    sid = str(max(int(k) for k in snap["schemas"]) + 1)
-    snap["schemas"][sid] = json.loads(struct.json())
+def _push_schema(snap: dict, struct: T.StructType) -> None:
+    """Record ``struct`` as a new schema id and make it current. A field
+    without a ``field_id`` is a new column and takes the next id from the
+    ``last_field_id`` counter, so a dropped or renamed-away column's id is
+    never reused."""
+    fields = []
+    for f in struct.fields:
+        if "field_id" not in f.metadata:
+            snap["last_field_id"] += 1
+            f = T.StructField(f.name, f.dataType, f.nullable,
+                              {**f.metadata, "field_id": snap["last_field_id"]})
+        fields.append(f)
+    sid = str(max(map(int, snap["schemas"]), default=0) + 1)
+    snap["schemas"][sid] = json.loads(T.StructType(fields).json())
     snap["schema"] = snap["schemas"][sid]
     snap["current_schema_id"] = sid
-    return sid
 
 
 def _check_alterable(snap: dict, name: str, verb: str) -> None:
@@ -310,9 +321,8 @@ class LakeTable:
             "version": 1,
             "snapshot_id": 1,
             "parent": None,
-            "schema": json.loads(schema.json()),
-            "schemas": {"1": json.loads(schema.json())},
-            "current_schema_id": "1",
+            "schemas": {},
+            "last_field_id": 0,
             "num_buckets": num_buckets,
             "bucket_key": bucket_key,
             "key_cols": key_cols or [],
@@ -322,6 +332,11 @@ class LakeTable:
             "lineage": [],  # this commit's lineage rows
             "properties": properties or {},
         }
+        _push_schema(snap, T.StructType([  # fields numbered 1..n
+            T.StructField(f.name, f.dataType, f.nullable,
+                          {k: v for k, v in f.metadata.items() if k != "field_id"})
+            for f in schema.fields
+        ]))
         t._write_snapshot(snap)
         return t
 
@@ -485,6 +500,8 @@ class LakeTable:
 
         Raises SchemaCompatibilityError on incompatible changes — the
         pipeline errors cleanly with no partial commit (FIXTURES.md F6).
+        A field matched by name keeps its id; an added one gets a fresh id,
+        so a name re-added after a drop or rename reads NULL in old files.
         """
         evolved = None
 
@@ -494,19 +511,7 @@ class LakeTable:
             evolved = check_schema_compatibility(cur, incoming)
             if evolved.json() == cur.json():
                 return None  # no-op
-            sid = _push_schema(snap, evolved)
-            # a column re-added after drop_column() is a NEW column: record
-            # the first schema-id whose files may carry its values, so scan
-            # masks the dropped predecessor's bytes in older files to NULL
-            dropped = dict(snap.get("dropped_cols") or {})
-            cur_names = {f.name for f in cur.fields}
-            for f in evolved.fields:
-                if f.name not in cur_names and f.name in dropped:
-                    mins = dict(snap.get("column_min_sid") or {})
-                    mins[f.name] = int(sid)
-                    snap["column_min_sid"] = mins
-                    del dropped[f.name]
-                    snap["dropped_cols"] = dropped
+            _push_schema(snap, evolved)
             return snap
 
         self.commit(mutate)
@@ -514,17 +519,16 @@ class LakeTable:
 
     def rename_column(self, old: str, new: str) -> T.StructType:
         """Rename a column by metadata only — no file rewrite (Iceberg
-        RENAME COLUMN analog). Old files keep the bytes under the old name;
-        ``column_aliases`` records the rename sid so scan's per-schema-id
-        harmonize selects the right stored name per file group (renames
-        chain). Key/bucket/sort/internal columns are refused; the target
-        name must be free.
+        RENAME COLUMN analog). The field keeps its id under the new name,
+        so scan reads old files' bytes, stored under the old name, through
+        the id; renames chain. Key/bucket/sort/internal columns are
+        refused; the target name must be free.
 
         A later batch still carrying the OLD name evolves it back as a NEW
-        column (old files' bytes masked to NULL, exactly like a dropped
-        name being re-added) — producers are expected to switch to the new
-        name; a non-nullable renamed column forces that at the gate.
-        Returns the evolved schema."""
+        column with a fresh id (old files read NULL for it, exactly like a
+        dropped name being re-added) — producers are expected to switch to
+        the new name; a non-nullable renamed column forces that at the
+        gate. Returns the evolved schema."""
 
         def mutate(snap):
             cur = T.StructType.fromJson(snap["schema"])
@@ -536,25 +540,11 @@ class LakeTable:
             if not new or new.startswith("_"):
                 raise ValueError(f"invalid target column name {new!r}")
             _check_alterable(snap, old, "renamed")
-            sid = _push_schema(snap, T.StructType([
-                T.StructField(new, f.dataType, f.nullable) if f.name == old else f
+            _push_schema(snap, T.StructType([
+                T.StructField(new, f.dataType, f.nullable, f.metadata)
+                if f.name == old else f
                 for f in cur.fields
             ]))
-            aliases = dict(snap.get("column_aliases") or {})
-            chain = list(aliases.pop(old, []))
-            chain.append([int(sid), old])
-            aliases[new] = chain
-            snap["column_aliases"] = aliases
-            mins = dict(snap.get("column_min_sid") or {})
-            if old in mins:
-                mins[new] = mins.pop(old)  # drop/re-add mask travels with it
-            else:
-                mins.pop(new, None)  # a stale mask from new's prior life
-            snap["column_min_sid"] = mins
-            dropped = dict(snap.get("dropped_cols") or {})
-            dropped[old] = int(sid)  # old name re-carried later = NEW column
-            dropped.pop(new, None)
-            snap["dropped_cols"] = dropped
             # remap name-bearing properties: a zone-mapped column keeps its
             # stats under the new name (otherwise _stats_cols filters the
             # stale old name out and file skipping silently stops)
@@ -574,24 +564,20 @@ class LakeTable:
         batches no longer carry it through ``_project``. Key, bucket, sort
         and engine-internal (``_``-prefixed) columns are refused.
 
-        Re-adding the same name later (explicitly, or implicitly by a
-        batch that still carries the column — it evolves back in) creates
-        a NEW column: files written before the re-add read NULL for it,
-        never the dropped predecessor's stored values (tracked via
-        ``column_min_sid``; realized per schema-id read group in scan).
-        Returns the evolved schema."""
+        The column's field id is retired with it: re-adding the same name
+        later (explicitly, or implicitly by a batch that still carries the
+        column — it evolves back in) creates a NEW column with a fresh id,
+        so files written before the re-add read NULL for it, never the
+        dropped predecessor's stored values. Returns the evolved schema."""
 
         def mutate(snap):
             cur = T.StructType.fromJson(snap["schema"])
             if name not in {f.name for f in cur.fields}:
                 raise ValueError(f"column {name!r} does not exist")
             _check_alterable(snap, name, "dropped")
-            sid = _push_schema(
+            _push_schema(
                 snap, T.StructType([f for f in cur.fields if f.name != name])
             )
-            dropped = dict(snap.get("dropped_cols") or {})
-            dropped[name] = int(sid)
-            snap["dropped_cols"] = dropped
             return snap
 
         return T.StructType.fromJson(self.commit(mutate)["schema"])
@@ -605,9 +591,11 @@ class LakeTable:
         filters: list[tuple] | None = None,
     ) -> DataFrame:
         """Read current rows (optionally only the given buckets), harmonized
-        to the current schema. Missing columns in old files → NULL; widened
-        types → cast. Per-group reads keep the parquet vectorized reader on
-        the exact written schema (no cross-file type confusion).
+        to the current schema by field id: each file group's column with a
+        current field's id is read under the current name, cast to the
+        current type; a field no column of the group holds reads NULL.
+        Per-group reads keep the parquet vectorized reader on the exact
+        written schema (no cross-file type confusion).
 
         Tombstone rows (``_deleted = true``) are filtered unless
         ``include_deleted`` — merge reads them for late-event fencing.
@@ -648,43 +636,19 @@ class LakeTable:
         field_names = {f.name for f in cur_schema.fields}
         ftypes = {f.name: f.dataType for f in cur_schema.fields}
 
-        # drop/re-add lineage: a column re-added after drop_column() is a
-        # NEW column — files written before its ``column_min_sid`` still
-        # store the OLD column's bytes under the same name and must read
-        # NULL (Iceberg's field-id semantics, realized here per schema-id
-        # group; no file is rewritten)
-        col_min_sid = {
-            k: int(v) for k, v in (snap.get("column_min_sid") or {}).items()
-        }
-        # rename lineage: aliases[current_name] = [[sid, stored_name], ...]
-        # (ascending sid) — files written before the first entry's sid store
-        # the column under that entry's old name; renames chain
-        aliases = snap.get("column_aliases") or {}
-
-        def stored_name(name, g):
-            for sid_at, old in aliases.get(name, []):
-                if g < int(sid_at):
-                    return old
-            return name
-
-        def harmonize(df, sid):
-            g = int(sid)
-            cols = []
-            for f in cur_schema.fields:
-                src = stored_name(f.name, g)
-                if src in df.columns and g >= col_min_sid.get(f.name, 0):
-                    cols.append(F.col(src).cast(f.dataType).alias(f.name))
-                else:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            return df.select(*cols)
-
         def read_union(groups):  # {sid: [paths]} -> harmonized union | None
             parts = []
             for sid, paths in groups.items():
                 g_schema = T.StructType.fromJson(snap["schemas"][sid])
-                parts.append(
-                    harmonize(self.spark.read.schema(g_schema).parquet(*paths), sid)
-                )
+                # a column is its field id: each current field reads the
+                # group's column holding the same id, or NULL if none does
+                stored = {f.metadata["field_id"]: F.col(f.name) for f in g_schema.fields}
+                df = self.spark.read.schema(g_schema).parquet(*paths)
+                parts.append(df.select(*[
+                    stored.get(f.metadata["field_id"], F.lit(None))
+                    .cast(f.dataType).alias(f.name)
+                    for f in cur_schema.fields
+                ]))
             return reduce(lambda a, b: a.unionByName(b), parts) if parts else None
 
         clean: dict[str, list[str]] = {}
@@ -978,7 +942,7 @@ class LakeTable:
 
         return self.commit(mutate)
 
-    def append(self, df: DataFrame, lineage: list[dict] | None = None) -> dict:
+    def append(self, df: DataFrame) -> dict:
         """Append-only commit (seeding / fact-append use; reference analog:
         chunked INSERT Loader.py:1149-1205 — here one distributed write).
 
@@ -1001,7 +965,6 @@ class LakeTable:
 
         def mutate(s):
             _add_entries(s, new_files, schema_id=s["current_schema_id"])
-            s["lineage"] = lineage or []
             return s
 
         return self.commit(mutate)
@@ -1120,7 +1083,10 @@ class LakeTable:
         commit (history preserved — the rollback itself is undoable).
         Fences are kept from the CURRENT snapshot: epochs applied since
         ``version`` stay fenced, so a stream resuming after rollback does
-        not double-apply them."""
+        not double-apply them. So is the field-id counter: the schema
+        returns to ``version``'s, but a column added after the rollback
+        never takes the id of one the rollback abandoned (a rename undone
+        and its new name re-added reads NULL in old files)."""
         old = self.snapshot_at(version)
 
         def mutate(snap):
@@ -1257,15 +1223,18 @@ class LakeTable:
         persisted into the ``stats_cols`` table property first, so this and
         every FUTURE write harvests their min/max."""
         cols = [cluster_by] if isinstance(cluster_by, str) else list(cluster_by or [])
+        snap = self.snapshot()
+        schema = T.StructType.fromJson(snap["schema"])
         if len(cols) > 1:
             from battetl_spark.lake.zorder import check_zorderable
 
-            check_zorderable(self.schema, cols)
-        elif cols and cols[0] not in self.schema.fieldNames():
+            check_zorderable(schema, cols)
+        elif cols and cols[0] not in schema.fieldNames():
             raise ValueError(f"cluster_by column {cols[0]!r} not in schema")
+        harvested = self._stats_cols(snap, cols)
         for c in cols:
-            self._ensure_stats_col(c)
-        snap = self.snapshot()
+            if c not in harvested:
+                self._ensure_stats_col(c)
         crowded = [
             int(b) for b, entries in snap["files"].items()
             if len(entries) >= min_files_per_bucket
@@ -1301,13 +1270,10 @@ class LakeTable:
         commit when already harvested) so zone maps exist for it on this
         and every future write."""
         def mutate(s):
-            props = s.setdefault("properties", {})
-            listed = list(props.get("stats_cols", []) or [])
-            implicit = {LAST_LSN_COL, DELETED_COL, "ts",
-                        (s.get("sort_cols") or [None])[0]}
-            if col in listed or col in implicit:
+            if self._stats_cols(s, [col]):
                 return None  # already harvested — nothing to commit
-            props["stats_cols"] = listed + [col]
+            props = s.setdefault("properties", {})
+            props["stats_cols"] = list(props.get("stats_cols", []) or []) + [col]
             return s
 
         self.commit(mutate)

@@ -113,9 +113,12 @@ class _MicrobatchDriver:
 
     def _maintain(self, tables, epoch_id: int) -> None:
         """Fold crowded buckets and the fenced epoch prefix of every table
-        the batch wrote. Runs after every batch, applied or a fenced replay:
-        both folds commit nothing when there is nothing to fold, and a crash
-        in here replays the (idempotent) batch and re-attempts them."""
+        the batch wrote, each through its own ``compact`` (a
+        ``HistoryTable`` keeps its ``valid_from_lsn`` clustering, so
+        ``state_as_of`` keeps skipping files). Runs after every batch,
+        applied or a fenced replay: both folds commit nothing when there is
+        nothing to fold, and a crash in here replays the (idempotent) batch
+        and re-attempts them."""
         fold_fences = (
             self.auto_compact_fences_every is not None
             and epoch_id % self.auto_compact_fences_every == 0
@@ -214,7 +217,7 @@ class CdcStream(_MicrobatchDriver):
             self.history_table.apply(
                 batch_df, epoch_id=epoch_id, collect_lineage=False
             )
-            tables.append(self.history_table.table)
+            tables.append(self.history_table)  # compacts with its clustering
         if self.stats_table is not None:
             from battetl_spark.cdc.stats_maintenance import refresh_stats
 

@@ -242,6 +242,44 @@ def test_rename_column_reads_old_files(spark, tmp_path, base_pdf):
     leak = df.filter("tool is not null and tool != 'resurrected'")
     assert leak.count() == 0  # no old bytes under the original name
 
+    # a rename INTO a dropped name keeps the renamed column's own bytes;
+    # the dropped column's bytes never appear under the name
+    kinds = sorted(
+        r["tool_kind"] for r in df.filter("tool_kind is not null").collect()
+    )
+    t.drop_column("tool")
+    t.rename_column("tool_kind", "tool")
+    df = t.scan()
+    assert "tool_kind" not in df.columns
+    assert df.filter("tool = 'resurrected'").count() == 0
+    assert sorted(r["tool"] for r in df.filter("tool is not null").collect()) == kinds
+
+
+def test_rollback_across_rename_then_readd_reads_null(spark, tmp_path, base_pdf):
+    """Rolling back a rename restores the old schema but not the new name:
+    a later batch that adds the renamed-to name creates a NEW column, and
+    the old column's bytes never appear under it."""
+    t = seeded(spark, tmp_path / "t9", base_pdf)
+    merge_apply(t, events_with(spark, base_events(20)), epoch_id=0)
+    v_pre = t.snapshot()["version"]
+    assert t.scan().filter("tool is not null").count() > 0
+
+    t.rename_column("tool", "tool_name")
+    t.rollback(v_pre)
+    assert "tool" in t.schema.fieldNames()
+    assert "tool_name" not in t.schema.fieldNames()
+
+    ev = base_events(10, lsn0=7000)
+    ev["tool_name"] = "new"
+    merge_apply(
+        t, events_with(spark, ev, extra=[("tool_name", T.StringType())]),
+        epoch_id=1,
+    )
+    df = t.scan()
+    assert df.filter("tool_name = 'new'").count() > 0
+    assert df.filter("tool_name is not null and tool_name != 'new'").count() == 0
+    assert df.filter("tool is not null").count() > 0
+
 
 def test_rename_column_refusals(spark, tmp_path, base_pdf):
     t = seeded(spark, tmp_path / "t8", base_pdf)

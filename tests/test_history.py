@@ -267,6 +267,52 @@ def test_streaming_history_sink_crash_resume(spark, tmp_path, events_pdf, expect
     assert_pdf_equal(cur, lww, sort_cols=KEY_COLS)
 
 
+def test_stream_auto_compaction_keeps_history_clustering(
+    spark, tmp_path, events_pdf, expected
+):
+    """CdcStream's auto-compaction compacts the history sink the way
+    HistoryTable.compact does — each crowded bucket re-clustered into
+    disjoint valid_from_lsn ranges — so after the stream an early-LSN
+    as-of scan still opens fewer files than the whole history, with
+    results unchanged."""
+    from battetl_spark.streaming.pipeline import (
+        CdcStream,
+        read_change_event_stream,
+    )
+
+    src = str(tmp_path / "events")
+    for r in range(4):
+        FX.change_events_df(
+            spark, events_pdf[events_pdf["lsn"] % 4 == r].reset_index(drop=True)
+        ).coalesce(1).write.mode("append").parquet(src)
+    t = LakeTable.create(
+        spark, str(tmp_path / "cur"), TRANSCRIPT_TABLE_SCHEMA,
+        num_buckets=4, key_cols=KEY_COLS,
+    )
+    h = HistoryTable.create(
+        spark, str(tmp_path / "hist"), TRANSCRIPT_SCHEMA,
+        key_cols=KEY_COLS, num_buckets=2,
+    )
+    CdcStream(
+        t, str(tmp_path / "ckpt"), history_table=h, auto_compact_files=2,
+    ).run_to_completion(read_change_event_stream(spark, src))
+
+    assert_pdf_equal(_norm(h.history().toPandas()), _norm(expected),
+                     sort_cols=["conv_id", "turn_idx", VALID_FROM])
+    L = int(events_pdf["lsn"].max()) // 8
+    all_files = len(h.history().inputFiles())
+    asof_files = len(
+        h.table.scan(filters=[(VALID_FROM, "<=", L)]).inputFiles()
+    )
+    assert 0 < asof_files < all_files
+    exp_state = FX.pandas_oracle_replay(
+        None, events_pdf[events_pdf["lsn"] <= L]
+    ).drop(columns=[LAST_LSN_COL])
+    got = h.state_as_of(L).select(
+        *[f.name for f in TRANSCRIPT_SCHEMA.fields]).toPandas()
+    assert_pdf_equal(got, exp_state, sort_cols=KEY_COLS)
+
+
 def test_expire_versions_retention(spark, events_pdf):
     """Retention GC: after expire_versions(L), every state_as_of(l >= L)
     and the current state are byte-identical; expired closed versions are

@@ -5,7 +5,9 @@ order-insensitive values — a local mirror of the driver's correctness gate.
 Usage: python tools/selfcheck.py [sf_dir] [only_query_name]
 
 Runs on ``local[$SPARK_GRAFT_CPUS]`` (default 16) with as many shuffle
-partitions, and clears the Spark cache after each builder.
+partitions, and clears the Spark cache after each builder. Each result
+line is flushed as it is printed, and the last line reads
+``N OK, M failures of K queries``.
 """
 
 from __future__ import annotations
@@ -49,6 +51,9 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2] if len(sys.argv) > 2 else None
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    # one result per line, whole, even when Spark's progress bar shares
+    # the stream
+    sys.stdout.reconfigure(line_buffering=True)
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus,
                       app_name="selfcheck")
     con = duckdb.connect()
@@ -58,9 +63,11 @@ def main():
     qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
+    ok = checked = 0
     for name, fn in qs.items():
         if only and name != only:
             continue
+        checked += 1
         try:
             got = fn(spark, sf).toPandas()
         except Exception as ex:
@@ -96,8 +103,9 @@ def main():
             failures.append((name, f"values differ at {bad[0]}: {bad[1]} vs {bad[2]}"))
             print(f"FAIL  {name}: first diff {bad[1]} vs {bad[2]}")
             continue
+        ok += 1
         print(f"OK    {name}: {len(got)} rows")
-    print(f"\n{len(failures)} failures")
+    print(f"\n{ok} OK, {len(failures)} failures of {checked} queries")
     return 1 if failures else 0
 
 
