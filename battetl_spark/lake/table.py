@@ -603,10 +603,11 @@ class LakeTable:
         ``filters`` is a list of ``(col, op, value)`` with op in
         ``> >= < <= =``: each is applied BOTH as zone-map file skipping
         (files whose per-file min/max range cannot satisfy every predicate
-        are never opened — read cost ∝ qualifying-file bytes) AND as a row
-        filter, so the semantics are exact regardless of which files carry
-        stats. A ``ts``- or ``_last_lsn``-bounded scan of a 100 TB table
-        touches only the files whose range overlaps.
+        are never opened — read cost ∝ qualifying-file bytes; a file's
+        stats are read under the name it stores the column's field id) AND
+        as a row filter, so the semantics are exact regardless of which
+        files carry stats. A ``ts``- or ``_last_lsn``-bounded scan of a
+        100 TB table touches only the files whose range overlaps.
 
         Merge-on-read: buckets holding DELTA files (``merge_apply(mode=
         'mor')`` appends batch winners without reading the bucket) are
@@ -635,6 +636,14 @@ class LakeTable:
 
         field_names = {f.name for f in cur_schema.fields}
         ftypes = {f.name: f.dataType for f in cur_schema.fields}
+        field_ids = {f.name: f.metadata["field_id"] for f in cur_schema.fields}
+
+        def may_match(e):  # zone maps are keyed by the name the file stores
+            stored = {f["metadata"]["field_id"]: f["name"]
+                      for f in snap["schemas"][e["schema_id"]]["fields"]}
+            return _file_may_match(
+                e, [(stored.get(field_ids.get(c)), op, v) for c, op, v in filters]
+            )
 
         def read_union(groups):  # {sid: [paths]} -> harmonized union | None
             parts = []
@@ -662,7 +671,7 @@ class LakeTable:
             if (
                 has_delta
                 and filters
-                and not any(_file_may_match(e, filters) for e in entries)
+                and not any(may_match(e) for e in entries)
             ):
                 continue  # bucket-granular skip: no file (base OR delta) in
                 # this bucket can hold a matching row, so no resolved winner
@@ -670,7 +679,7 @@ class LakeTable:
             for e in entries:
                 full = os.path.join(self.path, e["path"])
                 if not has_delta:
-                    if filters and not _file_may_match(e, filters):
+                    if filters and not may_match(e):
                         continue  # zone-map skip: range proves no row matches
                     clean.setdefault(e["schema_id"], []).append(full)
                 elif e.get("delta"):

@@ -326,3 +326,29 @@ def test_rename_column_remaps_stats_property(spark, tmp_path, base_pdf):
     props = t.snapshot()["properties"]
     assert "tool_name" in props["stats_cols"]
     assert "tool" not in props["stats_cols"]
+
+
+def test_filters_read_zone_maps_by_field_id(spark, tmp_path):
+    """File stats are keyed by the name the file stores: a filter on a
+    renamed column uses the stats of the column with the same field id.
+    After dropping ``a`` and renaming ``b`` into ``a``, the old files' ``a``
+    stats describe the dropped column and must not skip a file whose ``b``
+    holds the value; after a plain rename the old files still skip."""
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("a", T.StringType(), True),
+        T.StructField("b", T.StringType(), True),
+    ])
+    t = LakeTable.create(
+        spark, str(tmp_path / "t_fid"), schema, num_buckets=1,
+        key_cols=["conv_id"], properties={"stats_cols": ["a", "b"]},
+    )
+    t.append(spark.createDataFrame([("c1", "a1", "x1"), ("c2", "a2", "x2")], schema))
+    t.drop_column("a")
+    t.rename_column("b", "a")
+    got = t.scan(filters=[("a", "=", "x2")]).collect()
+    assert [(r["conv_id"], r["a"]) for r in got] == [("c2", "x2")]
+
+    t.rename_column("a", "c")
+    assert t.scan(filters=[("c", "=", "x9")]).inputFiles() == []
+    assert t.scan(filters=[("c", "=", "x1")]).count() == 1
